@@ -19,7 +19,8 @@ Scale design notes
 ``embedding_near_dup``   banded random-hyperplane LSH blocking (bucket
                          equi-join on small int keys) feeding an exact
                          int8-cosine verifier; opt-in exact all-pairs
-                         paths for broadcast-sized tables.
+                         paths (``pandas``: blocked anchors through the
+                         shared int8 cosine kernel).
 
 All similarity arithmetic is exact-integer or deterministic double, so
 every operator here is DuckDB-oracle-checkable.
@@ -885,11 +886,13 @@ def embedding_near_dup(
     threshold of 0.9 the same construction with 16-bit bands prunes
     ~1000x. More bands => higher recall, more candidates.
 
-    ``method='pandas'``: exact all-pairs via per-partition BLAS matmul
-    against the full int8 matrix, shipped once per executor as a Spark
-    broadcast (not closure capture) — O(n^2/P) work, no n^2 row
-    materialization. The opt-in exact path when the table fits a
-    broadcast; requires one driver collect by construction.
+    ``method='pandas'``: exact all-pairs through the one int8 cosine
+    kernel (``search.int8_cosine_scan``) with the threshold selector
+    (``cosine >= threshold`` and ``id_a < id_b``), blocked like the
+    miners: anchors gathered and broadcast ``MINER_ANCHOR_BLOCK`` rows
+    at a time, one corpus pass per block, passes unioned — O(n^2/P)
+    work, no n^2 row materialization, driver and per-task memory
+    bounded by the block and ``QCHUNK`` widths.
     ``method='expr'``: exact all-pairs cross-join + expression scoring
     (small inputs / oracle twin).
     """
@@ -966,39 +969,29 @@ def embedding_near_dup(
         )
     elif method == "pandas":
         import numpy as np
-        import pandas as pd
 
-        rows = q.collect()
-        all_ids = np.array([r[0] for r in rows], dtype=np.int64)
-        all_m = np.array([r[1] for r in rows], dtype=np.float32)
-        all_ss = (all_m.astype(np.int64) ** 2).sum(axis=1)
-        all_norm = np.sqrt(all_ss.astype(np.float64))
-        # one copy per executor via torrent broadcast; closure capture
-        # would re-ship the matrix with every task
-        bc = df.sparkSession.sparkContext.broadcast((all_ids, all_m, all_norm))
-        thr = threshold
-        id_name = id_col  # plain strings only in the UDF closure
+        from pythonvectordb_spark.operators.search import _per_anchor_block, int8_cosine_scan
 
-        def score(batches):
-            ref_ids, ref_m, ref_norm = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                M = np.vstack(pdf["qv"].to_numpy()).astype(np.float32)
-                ids = pdf[id_name].to_numpy().astype(np.int64)
-                vnorm = np.sqrt((M.astype(np.int64) ** 2).sum(axis=1).astype(np.float64))
-                dots = (M @ ref_m.T).astype(np.float64)
-                denom = vnorm[:, None] * ref_norm[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = np.where(denom > 0, dots / denom, 0.0)
+        def select(pdf, ref_ids):
+            ids = pdf[id_col].to_numpy().astype(np.int64)
+
+            def emit(s, j0):
                 # only (id_a < id_b) pairs above threshold
-                mask = (s >= thr) & (ids[:, None] < ref_ids[None, :])
-                r, c = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {"id_a": ids[r], "id_b": ref_ids[c], "cosine": s[r, c]}
-                )
+                ref = ref_ids[j0 : j0 + s.shape[1]]
+                r, c = np.nonzero((s >= threshold) & (ids[:, None] < ref[None, :]))
+                yield pd.DataFrame({"id_a": ids[r], "id_b": ref[c], "cosine": s[r, c]})
 
-        out = q.mapInPandas(score, schema="id_a long, id_b long, cosine double")
+            return emit
+
+        out = _per_anchor_block(
+            q,  # anchors reuse the checkpointed quantized frame
+            id_col,
+            F.col("qv"),
+            None,
+            lambda ref_ids, ref_m, _: int8_cosine_scan(
+                q, ref_ids, ref_m, select, "id_a long, id_b long, cosine double", "qv"
+            ),
+        )
     else:
         raise ValueError(f"bad method {method!r}")
     return out.filter(F.col("cosine") >= F.lit(threshold)).select(

@@ -19,8 +19,10 @@ Physical shape on a cluster
 
 from __future__ import annotations
 
+from itertools import islice
 from typing import Sequence
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 
 from pyspark.sql import Column, DataFrame, Window
@@ -198,10 +200,10 @@ def knn_join(
     Because every dot/norm is exact integer arithmetic, the two physical
     strategies below return BIT-IDENTICAL results — pick by data shape:
 
-    ``method='pandas'`` (default, the 100 TB path): broadcast the quantized
-    query matrix to every partition, score each Arrow batch with one
-    float32 BLAS matmul (int8 products <= 127^2 and 64-term sums < 2^24
-    stay exact in float32), keep a per-batch top-k per query, then one
+    ``method='pandas'`` (default, the 100 TB path): the quantized query
+    matrix goes through :func:`int8_cosine_scan`, the one int8 cosine
+    kernel (broadcast matrix, one float32 BLAS matmul per Arrow batch
+    and query chunk) with the per-query partial top-k selector, then one
     small shuffle for the global Window top-k. Work per row is a fused
     SIMD multiply-add instead of an interpreted per-element lambda —
     the same job shape, ~1000x less interpreter overhead.
@@ -228,8 +230,6 @@ def knn_join(
             cosine_similarity_int8_sym(F.col("qq"), qvec_col).alias("score"),
         )
     elif method == "pandas":
-        import numpy as np
-
         qrows = queries_q.collect()  # query set is small by contract
         qids_l = np.array([r[0] for r in qrows], dtype=np.int64)
         qmat_l = np.array([r[1] for r in qrows], dtype=np.float32)  # m x dim
@@ -242,6 +242,52 @@ def knn_join(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
+# Queries are scored in fixed-size chunks: peak memory per task is
+# rows x QCHUNK float64 scores (tens of MB at Arrow's default batch size)
+# REGARDLESS of the query-batch size — an unchunked 32k-query batch would
+# materialize a ~0.4 GB score matrix per task (plus selection copies) and
+# thrash the allocator across every core at once.
+QCHUNK = 4096
+
+
+def int8_cosine_scan(data: DataFrame, qids_l, qmat_l, select, schema: str, qvec_col: str):
+    """The one int8 cosine scoring kernel (the reference's exact scan,
+    pythonvectordb.py:147-151) behind ``knn_join``, ``KnnServer``, the
+    label-masked miners and exact embedding near-dup.
+
+    ``qids_l`` (int64) and ``qmat_l`` (m x dim int8-valued float32) ship
+    with their norms as ONE Spark broadcast (one torrent copy per
+    executor, not closure capture re-serialized into every task). Each
+    Arrow batch of ``data`` is stacked once and normed once, then scored
+    per ``QCHUNK`` query slice with one float32 matmul — int8 products
+    <= 128^2 and 64-term sums < 2^24 stay exact, so scores are exact
+    cosines in any chunking. ``select(pdf, qids)`` is called once per
+    batch and returns ``emit(scores, j0)``, which yields the pandas rows
+    (matching ``schema``) kept from the rows x chunk block whose column
+    ``c`` is query ``j0 + c``. Zero queries score nothing: the result is
+    a typed empty frame."""
+    # axis=-1: an empty anchor block's (0,) matrix norms to a scalar
+    qnorm_l = np.sqrt((qmat_l.astype(np.int64) ** 2).sum(axis=-1).astype(np.float64))
+    bc = data.sparkSession.sparkContext.broadcast((qids_l, qmat_l, qnorm_l))
+
+    def score_batches(batches):
+        qids, qmat, qnorm = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            M = np.vstack(pdf[qvec_col].to_numpy()).astype(np.float32)
+            vnorm = np.sqrt((M.astype(np.int64) ** 2).sum(axis=1).astype(np.float64))
+            emit = select(pdf, qids)
+            for j0 in range(0, len(qids), QCHUNK):
+                dots = (M @ qmat[j0 : j0 + QCHUNK].T).astype(np.float64)  # exact ints
+                denom = vnorm[:, None] * qnorm[j0 : j0 + QCHUNK][None, :]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    scores = np.where(denom > 0, dots / denom, 0.0)
+                yield from emit(scores, j0)
+
+    return data.mapInPandas(score_batches, schema=schema)
+
+
 def scored_from_qmat(
     data: DataFrame,
     qids_l,
@@ -251,84 +297,52 @@ def scored_from_qmat(
     query_id: str = "query_id",
     qvec_col: str = "qvec",
 ) -> DataFrame:
-    """The Arrow/BLAS scoring core of :func:`knn_join`, taking the
-    quantized query matrix directly (``qids_l`` int64 array, ``qmat_l``
-    m x dim int8-valued float32 array): broadcast the matrix, score each
-    Arrow batch with one matmul, emit per-batch partial top-k rows.
-    Shared by ``knn_join`` (which collects its queries DataFrame to a
-    matrix) and ``serving.KnnServer`` (which already holds the pending
-    queries as Python vectors — going through a queries DataFrame would
-    add two driver jobs per coalesced micro-batch for nothing).
-    Returns the un-windowed (query_id, vec_id, score) frame."""
-    import numpy as np
-    import pandas as pd
+    """:func:`int8_cosine_scan` with the per-query partial top-k
+    selector, taking the quantized query matrix directly (``qids_l``
+    int64 array, ``qmat_l`` m x dim int8-valued float32 array). Shared
+    by ``knn_join`` (which collects its queries DataFrame to a matrix)
+    and ``serving.KnnServer`` (which already holds the pending queries
+    as Python vectors — going through a queries DataFrame would add two
+    driver jobs per coalesced micro-batch for nothing). Returns the
+    un-windowed (query_id, vec_id, score) frame."""
 
-    qss = (qmat_l.astype(np.int64) ** 2).sum(axis=1)
-    qnorm_l = np.sqrt(qss.astype(np.float64))  # exact ints -> exact sqrt
-    # ship the query matrix as a Spark broadcast (one torrent copy per
-    # executor), NOT via closure capture (re-serialized into every
-    # task) — the difference matters for 32k+ query batches
-    bc = data.sparkSession.sparkContext.broadcast((qids_l, qmat_l, qnorm_l))
-    kk = k
+    def select(pdf, qids):
+        ids = pdf[data_id].to_numpy().astype(np.int64)
+        n = len(ids)
+        take = min(k, n)
 
-    # queries processed in fixed-size chunks: peak memory per task is
-    # rows x QCHUNK float64 scores (tens of MB at Arrow's default
-    # batch size) REGARDLESS of the query-batch size — an unchunked
-    # 32k-query batch would materialize a ~0.4 GB score matrix per
-    # task (plus partial-select copies) and thrash the allocator
-    # across every core at once.
-    QCHUNK = 4096
+        def emit(scores, j0):
+            # vectorized partial top-k: emit every row scoring >= the
+            # column's k-th largest value (ties included — a superset of
+            # the true top-k) and let the global merge do the exact
+            # (score desc, id asc) ranking. No per-query Python loop, no
+            # negation copies (ascending partition: position n-take IS
+            # the take-th largest); emission stays ~k rows per query.
+            if take < n:
+                kth = np.partition(scores, n - take, axis=0)[n - take, :]
+                r, c = np.nonzero(scores >= kth[None, :])
+                yield pd.DataFrame(
+                    {query_id: qids[j0 + c], data_id: ids[r], "score": scores[r, c]}
+                )
+            else:
+                nq = scores.shape[1]
+                yield pd.DataFrame(
+                    {
+                        query_id: np.repeat(qids[j0 : j0 + nq], n),
+                        data_id: np.tile(ids, nq),
+                        "score": scores.T.reshape(-1),
+                    }
+                )
 
-    def score_batches(batches):
-        qids, qmat, qnorm = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.vstack(pdf[qvec_col].to_numpy()).astype(np.float32)
-            ids = pdf[data_id].to_numpy().astype(np.int64)
-            vss = (M.astype(np.int64) ** 2).sum(axis=1)
-            vnorm = np.sqrt(vss.astype(np.float64))
-            n = len(ids)
-            take = min(kk, n)
-            for j0 in range(0, len(qids), QCHUNK):
-                sub = qmat[j0 : j0 + QCHUNK]
-                dots = (M @ sub.T).astype(np.float64)  # exact integers
-                denom = vnorm[:, None] * qnorm[j0 : j0 + QCHUNK][None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    scores = np.where(denom > 0, dots / denom, 0.0)
-                # per-batch partial top-k, fully vectorized: emit
-                # every row scoring >= the column's k-th largest
-                # value (ties included — a superset of the true
-                # top-k) and let the global Window do the exact
-                # (score desc, id asc) ranking. No per-query Python
-                # loop (a per-column lexsort loop dominates whole
-                # jobs at 32k+ queries), no negation copies
-                # (ascending partition: position n-take IS the
-                # take-th largest). Emission stays ~k rows per query
-                # per batch, so the Window's shuffle is unchanged.
-                if take < n:
-                    kth = np.partition(scores, n - take, axis=0)[n - take, :]
-                    r, c = np.nonzero(scores >= kth[None, :])
-                    yield pd.DataFrame(
-                        {
-                            query_id: qids[j0 + c],
-                            data_id: ids[r],
-                            "score": scores[r, c],
-                        }
-                    )
-                else:
-                    nq = scores.shape[1]
-                    yield pd.DataFrame(
-                        {
-                            query_id: np.repeat(qids[j0 : j0 + nq], n),
-                            data_id: np.tile(ids, nq),
-                            "score": scores.T.reshape(-1),
-                        }
-                    )
+        return emit
 
-    return data.select(F.col(data_id), F.col(qvec_col)).mapInPandas(
-        score_batches,
-        schema=f"{query_id} long, {data_id} long, score double",
+    return int8_cosine_scan(
+        data.select(F.col(data_id), F.col(qvec_col)),
+        qids_l,
+        qmat_l,
+        select,
+        f"{query_id} long, {data_id} long, score double",
+        qvec_col,
     )
 
 
@@ -344,35 +358,21 @@ def scored_from_qmat_labeled(
     qvec_col: str = "qvec",
     label_col: str = "label",
 ) -> DataFrame:
-    """Label-masked variant of :func:`scored_from_qmat` (round-10
-    optimization): score the broadcast query matrix against every row in
-    ONE corpus pass and keep, per query and batch, a partial top-``k``
-    among SAME-label rows (``k_same``), DIFFERENT-label rows
-    (``k_diff``), or both — the scoring core of :func:`hard_negatives`
-    and :func:`contrastive_triplets`, which previously ran one
-    ``knn_join`` per label class (guide §2.4/§4: C classes cost C full
-    corpus scans, C Arrow boundary crossings and C+1 driver jobs for
-    the same flop count; this is 1 of each, with the label constraint
-    applied as a mask inside the batch matmul).
-
-    Bit-equality with the per-class plan: dots/norms are the identical
-    exact-integer float32-matmul arithmetic of ``scored_from_qmat``,
-    masking only SELECTS pairs (never changes a score), and per-batch
-    partial top-k emission stays a superset of the true per-batch
-    top-k, so the global Window ranking downstream sees the same
-    (score, id) candidates per query. Returns the un-windowed
-    (query_id, vec_id, score, is_same int) frame.
+    """:func:`int8_cosine_scan` with the label-masked selector: per query
+    and batch, a partial top-``k`` among SAME-label rows (``k_same``),
+    DIFFERENT-label rows (``k_diff``), or both — the scoring core of
+    :func:`hard_negatives` and :func:`contrastive_triplets` (one corpus
+    pass instead of one ``knn_join`` per label class). Masking only
+    SELECTS pairs (never changes a score) and the per-batch emission
+    stays a superset of the true per-batch top-k, so the Window ranking
+    downstream sees the per-class plan's exact candidates. Returns the
+    un-windowed (query_id, vec_id, score, is_same int) frame.
     """
-    import numpy as np
-    import pandas as pd
-
-    qss = (qmat_l.astype(np.int64) ** 2).sum(axis=1)
-    qnorm_l = np.sqrt(qss.astype(np.float64))
     # NULL-label parity with the per-class plan (ADVICE r10): the old
     # shape iterated over non-null label classes, filtering the corpus
     # with `label == lab` / `label != lab` — both NULL for a NULL-label
     # row, so such rows were never anchors and never negatives. Anchors
-    # are pre-filtered by _corpus_qmat_labeled; data-side NULLs map to
+    # are pre-filtered by _corpus_anchor_blocks; data-side NULLs map to
     # code -1 below, which the same arm can never match and the diff arm
     # explicitly excludes. Unknown NON-null labels keep code -2: eligible
     # as different-label negatives (old `label != lab` = TRUE), never as
@@ -380,137 +380,106 @@ def scored_from_qmat_labeled(
     code_of = {lab: i for i, lab in enumerate(dict.fromkeys(qlabels))}
     assert None not in code_of, "anchor labels must be non-null"
     qcodes_l = np.array([code_of[lab] for lab in qlabels], dtype=np.int64)
-    bc = data.sparkSession.sparkContext.broadcast(
-        (qids_l, qmat_l, qnorm_l, qcodes_l, code_of)
-    )
-    QCHUNK = 4096
+    bc = data.sparkSession.sparkContext.broadcast((qcodes_l, code_of))
 
-    def score_batches(batches):
-        qids, qmat, qnorm, qcodes, codes = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.vstack(pdf[qvec_col].to_numpy()).astype(np.float32)
-            ids = pdf[data_id].to_numpy().astype(np.int64)
-            dcodes = (
-                pdf[label_col]
-                .map(lambda x: -1 if x is None else codes.get(x, -2))
-                .to_numpy()
-                .astype(np.int64)
-            )
-            vss = (M.astype(np.int64) ** 2).sum(axis=1)
-            vnorm = np.sqrt(vss.astype(np.float64))
-            n = len(ids)
-            for j0 in range(0, len(qids), QCHUNK):
-                sub = qmat[j0 : j0 + QCHUNK]
-                dots = (M @ sub.T).astype(np.float64)  # exact integers
-                denom = vnorm[:, None] * qnorm[j0 : j0 + QCHUNK][None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    scores = np.where(denom > 0, dots / denom, 0.0)
-                same = dcodes[:, None] == qcodes[j0 : j0 + QCHUNK][None, :]
-                for is_same, kk in ((True, k_same), (False, k_diff)):
-                    if kk is None:
-                        continue
-                    # NULL-label rows (code -1) are invalid in BOTH arms,
-                    # mirroring the per-class plan's NULL comparisons
-                    valid = (
-                        same if is_same else (~same) & (dcodes[:, None] != -1)
-                    )
-                    # -2.0 sits below any true cosine, so masked slots
-                    # never displace valid candidates from the partial
-                    # top-k; the `& valid` keeps them out of emission
-                    masked = np.where(valid, scores, -2.0)
-                    take = min(kk, n)
-                    kth = np.partition(masked, n - take, axis=0)[n - take, :]
-                    r, c = np.nonzero((masked >= kth[None, :]) & valid)
-                    yield pd.DataFrame(
-                        {
-                            query_id: qids[j0 + c],
-                            data_id: ids[r],
-                            "score": scores[r, c],
-                            "is_same": np.full(len(r), int(is_same), dtype=np.int32),
-                        }
-                    )
+    def select(pdf, qids):
+        qcodes, codes = bc.value
+        ids = pdf[data_id].to_numpy().astype(np.int64)
+        dcodes = (
+            pdf[label_col]
+            .map(lambda x: -1 if x is None else codes.get(x, -2))
+            .to_numpy()
+            .astype(np.int64)
+        )
+        n = len(ids)
 
-    return data.select(F.col(data_id), F.col(qvec_col), F.col(label_col)).mapInPandas(
-        score_batches,
-        schema=f"{query_id} long, {data_id} long, score double, is_same int",
+        def emit(scores, j0):
+            same = dcodes[:, None] == qcodes[j0 : j0 + scores.shape[1]][None, :]
+            for is_same, kk in ((True, k_same), (False, k_diff)):
+                if kk is None:
+                    continue
+                # NULL-label rows (code -1) are invalid in BOTH arms,
+                # mirroring the per-class plan's NULL comparisons
+                valid = same if is_same else (~same) & (dcodes[:, None] != -1)
+                # -2.0 sits below any true cosine, so masked slots never
+                # displace valid candidates from the partial top-k; the
+                # `& valid` keeps them out of emission
+                masked = np.where(valid, scores, -2.0)
+                take = min(kk, n)
+                kth = np.partition(masked, n - take, axis=0)[n - take, :]
+                r, c = np.nonzero((masked >= kth[None, :]) & valid)
+                yield pd.DataFrame(
+                    {
+                        query_id: qids[j0 + c],
+                        data_id: ids[r],
+                        "score": scores[r, c],
+                        "is_same": np.full(len(r), int(is_same), dtype=np.int32),
+                    }
+                )
+
+        return emit
+
+    return int8_cosine_scan(
+        data.select(F.col(data_id), F.col(qvec_col), F.col(label_col)),
+        qids_l,
+        qmat_l,
+        select,
+        f"{query_id} long, {data_id} long, score double, is_same int",
+        qvec_col,
     )
 
 
-# Anchor-block width for the corpus-as-anchors miners: the driver and
-# each broadcast hold at most this many anchors at a time (§5 — no
-# full-table collect/broadcast at scale). A multiple of the scorer's
-# QCHUNK (4096) so the per-block gemm sub-matrices are the same ones the
-# single-gather layout produced — block boundaries land exactly on chunk
-# boundaries, keeping scores bit-identical.
+# Anchor-block width for the corpus-as-anchors scans (the miners and
+# exact embedding near-dup): the driver and each broadcast hold at most
+# this many anchors at a time (§5 — no full-table collect/broadcast at
+# scale). Scores are exact integers over exact norms, so any block width
+# gives bit-identical output.
 MINER_ANCHOR_BLOCK = 65536
 
 
-def _corpus_anchor_blocks(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    block: int | None = None,  # None -> MINER_ANCHOR_BLOCK (patchable in tests)
-):
-    """Yield (ids, quantized matrix, labels) anchor BLOCKS for the
-    corpus-as-anchors miners — the same quantize(l2_normalize(.)) values
-    ``knn_join`` derives for its query side. Round-11 (VERDICT r10 item
-    6): gathered via ``toLocalIterator`` in ``block``-row slices instead
-    of one full-table ``collect()``, so driver residency per gather is
-    one block, not the corpus; each block is broadcast and scored in its
-    own corpus pass (exact all-pairs mining is O(n^2) flops regardless —
-    blocking bounds MEMORY, the documented at-scale swap for flop count
-    is ANN candidates). NULL-label rows never anchor (per-class-plan
-    parity, ADVICE r10)."""
-    import numpy as np
-
-    if block is None:
-        block = MINER_ANCHOR_BLOCK
-    it = (
-        emb.filter(F.col(label_col).isNotNull())  # NULL labels never anchor
-        .select(
-            F.col(id_col), quantize(l2_normalize(vec_col)).alias("qq"), F.col(label_col)
-        )
-        .toLocalIterator()
-    )
-    ids: list = []
-    vecs: list = []
-    labs: list = []
-    for r in it:
-        ids.append(r[0])
-        vecs.append(r[1])
-        labs.append(r[2])
-        if len(ids) == block:
-            yield (
-                np.array(ids, dtype=np.int64),
-                np.array(vecs, dtype=np.float32),
-                labs,
-            )
-            ids, vecs, labs = [], [], []
-    if ids:
+def _corpus_anchor_blocks(emb: DataFrame, id_col: str, qvec: Column, label_col: str | None):
+    """Yield (ids, int8 matrix, labels) anchor BLOCKS of at most
+    ``MINER_ANCHOR_BLOCK`` rows of ``emb``'s int8 vector expression
+    ``qvec`` (the miners pass the quantize(l2_normalize(.)) ``knn_join``
+    derives for its query side), gathered via ``toLocalIterator`` so
+    driver residency per gather is one block, not the corpus. Exact
+    all-pairs work is O(n^2) flops regardless; blocking bounds MEMORY
+    (the documented at-scale swap for flop count is ANN candidates).
+    With a ``label_col``, NULL-label rows never anchor (per-class-plan
+    parity, ADVICE r10); ``None`` means no label filter, with every
+    label None. Always yields at least one block — an empty one for an
+    anchor-free corpus, which scores to a typed empty frame."""
+    if label_col is not None:
+        emb = emb.filter(F.col(label_col).isNotNull())  # NULL labels never anchor
+    it = emb.select(
+        F.col(id_col),
+        qvec,
+        F.col(label_col) if label_col is not None else F.lit(None),
+    ).toLocalIterator()
+    rows = list(islice(it, MINER_ANCHOR_BLOCK))
+    while True:  # the first block is yielded even when empty
         yield (
-            np.array(ids, dtype=np.int64),
-            np.array(vecs, dtype=np.float32),
-            labs,
+            np.array([r[0] for r in rows], dtype=np.int64),
+            np.array([r[1] for r in rows], dtype=np.float32),
+            [r[2] for r in rows],
         )
+        rows = list(islice(it, MINER_ANCHOR_BLOCK))
+        if not rows:
+            return
 
 
-def _corpus_qmat_labeled(
-    emb: DataFrame, id_col: str, vec_col: str, label_col: str
-):
-    """Single-gather variant of :func:`_corpus_anchor_blocks` (kept for
-    the scorer property pins, which address the whole anchor set)."""
-    import numpy as np
+def _per_anchor_block(emb: DataFrame, id_col: str, qvec: Column, label_col: str | None, scan):
+    """The blocked-anchor driver: one ``scan(ids, qmat, labels)`` kernel
+    pass per :func:`_corpus_anchor_blocks` block, unioned. Anchors are
+    block-local, so each anchor's candidates are complete within its own
+    pass and the union only widens the downstream input (a single block
+    — the bench/test plan shape — up to ``MINER_ANCHOR_BLOCK`` anchors)."""
+    from functools import reduce
 
-    blocks = list(_corpus_anchor_blocks(emb, id_col, vec_col, label_col))
-    if len(blocks) == 1:
-        return blocks[0]
-    qids_l = np.concatenate([b[0] for b in blocks])
-    qmat_l = np.concatenate([b[1] for b in blocks])
-    qlabels = [lab for b in blocks for lab in b[2]]
-    return qids_l, qmat_l, qlabels
+    return reduce(
+        DataFrame.unionByName,
+        [scan(*b) for b in _corpus_anchor_blocks(emb, id_col, qvec, label_col)],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1134,42 +1103,27 @@ def hard_negatives(
     wrong class) and the embedding-quality audit for class bleed.
     Returns (query_id, neg_id, score, rank), score rounded to 9.
 
-    Physical plan (round-10 optimization, guide §2.4/§4): ONE corpus
-    pass — the anchor matrix plus labels broadcast once, each Arrow
-    batch scored with one BLAS matmul and same-label pairs masked
-    inside the batch (``scored_from_qmat_labeled``), then the single
-    Window top-k. The previous shape (one ``knn_join`` per label class,
-    unioned) cost C corpus scans, C Python boundary crossings and C+1
-    driver collect jobs for the identical flop count and identical
-    scores; measured 3.9 s -> 1.9 s at sf0.1 with bit-equal output.
-    The anchor collect is the same total volume the per-class plan
-    collected (the documented small-side contract, same as knn_join's
-    query matrix); at 100 TB swap the exact scorer for ANN candidates
-    per class and keep the same window shape.
+    Physical plan (guide §2.4/§4): ONE label-masked corpus pass per
+    anchor block (:func:`_per_anchor_block`) — the block's anchor matrix
+    plus labels broadcast once, each Arrow batch scored by the int8
+    kernel with same-label pairs masked inside the batch
+    (``scored_from_qmat_labeled``), then the single Window top-k. The
+    retired shape (one ``knn_join`` per label class, unioned) cost C
+    corpus scans and C+1 driver jobs for identical scores; measured
+    3.9 s -> 1.9 s at sf0.1 with bit-equal output. At 100 TB swap the
+    exact scorer for ANN candidates per class and keep the same window
+    shape. No non-NULL-label anchor -> a typed empty result.
     """
-    from functools import reduce
-
-    parts = [
-        scored_from_qmat_labeled(
-            emb,
-            qids_l,
-            qmat_l,
-            qlabels,
-            k_same=None,
-            k_diff=k,
-            data_id=id_col,
-            qvec_col=qvec_col,
-            label_col=label_col,
-        )
-        for qids_l, qmat_l, qlabels in _corpus_anchor_blocks(
-            emb, id_col, vec_col, label_col
-        )
-    ]
-    # one corpus pass per anchor block (a single block — hence this exact
-    # plan shape — up to MINER_ANCHOR_BLOCK anchors); anchors are
-    # block-local, so each anchor's candidate set is complete within its
-    # own pass and the union only widens the Window's input
-    scored = reduce(DataFrame.unionByName, parts)
+    scored = _per_anchor_block(
+        emb,
+        id_col,
+        quantize(l2_normalize(vec_col)),
+        label_col,
+        lambda qids_l, qmat_l, qlabels: scored_from_qmat_labeled(
+            emb, qids_l, qmat_l, qlabels, k_same=None, k_diff=k,
+            data_id=id_col, qvec_col=qvec_col, label_col=label_col,
+        ),
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1291,9 +1245,9 @@ def contrastive_triplets(
     Margins and the violation flag are computed from the ROUND-9 scores
     both sides already emit, keeping the boundary engine-portable.
 
-    Scale shape (round-10 optimization, guide §2.4/§4): ONE corpus pass
-    scores the broadcast anchor matrix against every row with one BLAS
-    matmul per Arrow batch and emits BOTH the same-label (k=2, self
+    Scale shape (guide §2.4/§4): ONE corpus pass per anchor block
+    (:func:`_per_anchor_block`) scores the broadcast anchor matrix
+    against every row with the int8 kernel and emits BOTH the same-label (k=2, self
     dropped after — the positive arm) and different-label (k=1 — the
     negative arm) partial top rows (``scored_from_qmat_labeled``); the
     per-anchor top rows are the only shuffled frames. The previous
@@ -1302,30 +1256,16 @@ def contrastive_triplets(
     at sf0.1, bit-equal. At 100 TB swap the exact scorer for per-class
     ANN candidates, same window shape.
     """
-    from functools import reduce
-
-    parts = [
-        scored_from_qmat_labeled(
-            emb,
-            qids_l,
-            qmat_l,
-            qlabels,
-            k_same=2,
-            k_diff=1,
-            data_id=id_col,
-            qvec_col=qvec_col,
-            label_col=label_col,
-        )
-        for qids_l, qmat_l, qlabels in _corpus_anchor_blocks(
-            emb, id_col, vec_col, label_col
-        )
-    ]
-    # one corpus pass per anchor block (single block up to
-    # MINER_ANCHOR_BLOCK anchors — the bench/test plan shape); anchors
-    # are block-local so every anchor's arms are complete in its pass
-    scored = reduce(DataFrame.unionByName, parts).localCheckpoint(
-        eager=False
-    )  # one Python pass per block feeds both arms
+    scored = _per_anchor_block(
+        emb,
+        id_col,
+        quantize(l2_normalize(vec_col)),
+        label_col,
+        lambda qids_l, qmat_l, qlabels: scored_from_qmat_labeled(
+            emb, qids_l, qmat_l, qlabels, k_same=2, k_diff=1,
+            data_id=id_col, qvec_col=qvec_col, label_col=label_col,
+        ),
+    ).localCheckpoint(eager=False)  # one Python pass per block feeds both arms
     wp = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("pos_id"))
     pos = (
         scored.filter((F.col("is_same") == 1) & (F.col("query_id") != F.col(id_col)))

@@ -27,7 +27,7 @@ from pythonvectordb_spark.registry._core import (
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive hard-negative mining (new round 4): for every anchor,
     the exact top-5 most-similar vectors with a DIFFERENT label, via one
-    BLAS knn_join per class against the non-class corpus — the label
+    label-masked int8 kernel pass per anchor block — the label
     constraint holds by construction, never by over-fetch-then-filter
     (`operators/search.hard_negatives`)."""
     return S.hard_negatives(_emb(spark, sf_dir), k=5)

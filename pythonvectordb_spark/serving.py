@@ -173,10 +173,12 @@ class KnnServer:
     def _execute(self, qvs: list[list[int]]) -> dict[int, list[tuple[int, float]]]:
         """One batched knn job for the coalesced queries (positional ids).
 
-        Single-stage: the scan emits each Arrow batch's partial top-k per
-        query (a superset of that batch's contribution to the global
-        top-k), and the GLOBAL (score desc, id asc) merge happens on the
-        driver over the collected partials — bounded at
+        Single-stage: the scan is ``scored_from_qmat`` — the one int8
+        cosine kernel (``operators.search.int8_cosine_scan``) with the
+        per-query partial top-k selector — emitting each Arrow batch's
+        partial top-k per query (a superset of that batch's contribution
+        to the global top-k), and the GLOBAL (score desc, id asc) merge
+        happens on the driver over the collected partials — bounded at
         ~k x partitions x queries rows. Skipping ``knn_join``'s Window
         removes a shuffle + second stage wave from every serve job, which
         at single-query latencies is most of the job; the merge applies

@@ -27,6 +27,8 @@ SMOKE = [
     "kmv_distinct_users",        # sketch-internal hash oracle
     "dedup_minhash_lsh",         # banded dedup + text shingler
     "order_priority_counts",     # plain grouped count (r1 sentinel)
+    "knn_join",                  # int8 cosine scan, per-query top-k selector
+    "contrastive_triplets",      # int8 cosine scan, label-masked (both arms)
 ]
 
 

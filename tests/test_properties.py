@@ -1685,7 +1685,7 @@ def test_labeled_scorer_matches_expression_and_mask_edges(spark):
 
     from pythonvectordb_spark.functions.vector import cosine_similarity_int8_sym
     from pythonvectordb_spark.operators.search import (
-        _corpus_qmat_labeled,
+        _corpus_anchor_blocks,
         scored_from_qmat_labeled,
         with_qvec,
     )
@@ -1705,7 +1705,7 @@ def test_labeled_scorer_matches_expression_and_mask_edges(spark):
     emb = with_qvec(
         spark.createDataFrame(rows, "vec_id long, embedding array<double>, label string")
     )
-    qids, qmat, qlabels = _corpus_qmat_labeled(emb, "vec_id", "embedding", "label")
+    qids, qmat, qlabels = next(_corpus_anchor_blocks(emb, "vec_id", F.col("qvec"), "label"))
     got = scored_from_qmat_labeled(
         emb, qids, qmat, qlabels, k_same=5, k_diff=5
     ).collect()
@@ -1751,7 +1751,7 @@ def test_labeled_scorer_null_label_semantics(spark):
     import math
 
     from pythonvectordb_spark.operators.search import (
-        _corpus_qmat_labeled,
+        _corpus_anchor_blocks,
         scored_from_qmat_labeled,
         with_qvec,
     )
@@ -1769,7 +1769,7 @@ def test_labeled_scorer_null_label_semantics(spark):
     emb = with_qvec(
         spark.createDataFrame(rows, "vec_id long, embedding array<double>, label string")
     )
-    qids, qmat, qlabels = _corpus_qmat_labeled(emb, "vec_id", "embedding", "label")
+    qids, qmat, qlabels = next(_corpus_anchor_blocks(emb, "vec_id", F.col("qvec"), "label"))
     assert 3 not in set(qids.tolist())  # NULL-label row is not an anchor
     assert None not in qlabels
     got = scored_from_qmat_labeled(
@@ -1801,6 +1801,7 @@ def test_miner_anchor_blocks_bit_equal_to_single_gather(spark, monkeypatch):
     import math
 
     from pythonvectordb_spark.operators import search as S
+    from pythonvectordb_spark.operators.dedup import embedding_near_dup
 
     def unit(theta):
         return [float(x) for x in [math.cos(theta), math.sin(theta)] + [0.0] * 62]
@@ -1818,11 +1819,43 @@ def test_miner_anchor_blocks_bit_equal_to_single_gather(spark, monkeypatch):
     )
     base_hn = sorted(map(tuple, S.hard_negatives(emb, k=2).collect()))
     base_ct = sorted(map(tuple, S.contrastive_triplets(emb).collect()))
+    exact_nd = sorted(map(tuple, embedding_near_dup(emb, method="expr").collect()))
     monkeypatch.setattr(S, "MINER_ANCHOR_BLOCK", 2)
     blk_hn = sorted(map(tuple, S.hard_negatives(emb, k=2).collect()))
     blk_ct = sorted(map(tuple, S.contrastive_triplets(emb).collect()))
+    blk_nd = sorted(map(tuple, embedding_near_dup(emb, method="pandas").collect()))
     assert blk_hn == base_hn
     assert blk_ct == base_ct
+    # the threshold selector's multi-block union is the exact pair set
+    assert blk_nd == exact_nd and exact_nd
+
+
+def test_miners_empty_anchor_set_typed_empty(spark):
+    """Degenerate-input pin: with no non-NULL-label anchor (an empty
+    table, or every label NULL) both miners return 0 rows with the same
+    columns and types as a non-empty result, never a TypeError from an
+    empty block union."""
+    import math
+
+    from pythonvectordb_spark.operators import search as S
+
+    schema = "vec_id long, embedding array<double>, label string"
+    vec = [1.0, 0.5] + [0.0] * 62
+    full = S.with_qvec(
+        spark.createDataFrame([(1, vec, "a"), (2, vec, "a"), (3, vec, "b")], schema)
+    )
+    empty = S.with_qvec(spark.createDataFrame([], schema))
+    all_null = S.with_qvec(
+        spark.createDataFrame(
+            [(i, [math.cos(i), math.sin(i)] + [0.0] * 62, None) for i in range(4)], schema
+        )
+    )
+    for miner in (lambda e: S.hard_negatives(e, k=2), S.contrastive_triplets):
+        want = miner(full).dtypes
+        for emb in (empty, all_null):
+            out = miner(emb)
+            assert out.dtypes == want
+            assert out.count() == 0
 
 
 def test_lsh_float_sigs_vec_bit_equal_to_expr(spark):
