@@ -990,7 +990,7 @@ def embedding_near_dup(
             None,
             lambda ref_ids, ref_m, _: int8_cosine_scan(
                 q, ref_ids, ref_m, select, "id_a long, id_b long, cosine double", "qv"
-            ),
+            )[0],
         )
     else:
         raise ValueError(f"bad method {method!r}")

@@ -265,12 +265,26 @@ def int8_cosine_scan(data: DataFrame, qids_l, qmat_l, select, schema: str, qvec_
     batch and returns ``emit(scores, j0)``, which yields the pandas rows
     (matching ``schema``) kept from the rows x chunk block whose column
     ``c`` is query ``j0 + c``. Zero queries score nothing: the result is
-    a typed empty frame."""
+    a typed empty frame.
+
+    Returns ``(frame, broadcast)``. The broadcast's driver-side file
+    lives until ``destroy()``, so a caller that consumes the frame once
+    (``KnnServer``) destroys it after its collect; a lazy frame handed to
+    the user (``knn_join``, the miners) keeps it for the session."""
     # axis=-1: an empty anchor block's (0,) matrix norms to a scalar
     qnorm_l = np.sqrt((qmat_l.astype(np.int64) ** 2).sum(axis=-1).astype(np.float64))
     bc = data.sparkSession.sparkContext.broadcast((qids_l, qmat_l, qnorm_l))
 
     def score_batches(batches):
+        # imported here, not pickled by reference: executors without the
+        # package on their path still run the kernel, just without the
+        # guard for this worker's later tasks
+        try:
+            from pythonvectordb_spark.session import skip_unchanged_zip_rereads
+        except ModuleNotFoundError:
+            pass
+        else:
+            skip_unchanged_zip_rereads()
         qids, qmat, qnorm = bc.value
         for pdf in batches:
             if len(pdf) == 0:
@@ -285,7 +299,7 @@ def int8_cosine_scan(data: DataFrame, qids_l, qmat_l, select, schema: str, qvec_
                     scores = np.where(denom > 0, dots / denom, 0.0)
                 yield from emit(scores, j0)
 
-    return data.mapInPandas(score_batches, schema=schema)
+    return data.mapInPandas(score_batches, schema=schema), bc
 
 
 def scored_from_qmat(
@@ -301,10 +315,17 @@ def scored_from_qmat(
     selector, taking the quantized query matrix directly (``qids_l``
     int64 array, ``qmat_l`` m x dim int8-valued float32 array). Shared
     by ``knn_join`` (which collects its queries DataFrame to a matrix)
-    and ``serving.KnnServer`` (which already holds the pending queries
-    as Python vectors — going through a queries DataFrame would add two
-    driver jobs per coalesced micro-batch for nothing). Returns the
-    un-windowed (query_id, vec_id, score) frame."""
+    and, through :func:`_topk_scan`, ``serving.KnnServer`` (which already
+    holds the pending queries as Python vectors — going through a
+    queries DataFrame would add two driver jobs per coalesced
+    micro-batch for nothing). Returns the un-windowed (query_id, vec_id,
+    score) frame."""
+    return _topk_scan(data, qids_l, qmat_l, k, data_id, query_id, qvec_col)[0]
+
+
+def _topk_scan(data, qids_l, qmat_l, k, data_id, query_id, qvec_col):
+    """:func:`scored_from_qmat`'s ``(frame, broadcast)`` pair, for a
+    caller that destroys the broadcast once the frame is collected."""
 
     def select(pdf, qids):
         ids = pdf[data_id].to_numpy().astype(np.int64)
@@ -426,7 +447,7 @@ def scored_from_qmat_labeled(
         select,
         f"{query_id} long, {data_id} long, score double, is_same int",
         qvec_col,
-    )
+    )[0]
 
 
 # Anchor-block width for the corpus-as-anchors scans (the miners and

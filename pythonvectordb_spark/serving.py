@@ -2,11 +2,14 @@
 
 The reference serves ~1,100 concurrent QPS because every ``search`` call
 is an in-process NumPy matmul behind an RLock (benchmark_suite.py:133-162).
-Spark's unit of execution is a JOB, with a per-job scheduling floor of
-tens to hundreds of milliseconds — issuing one job per single query from
-N client threads can never approach that number (BENCH_r02 measured
-10.9 qps on the reference's own concurrent section), while the SAME
-engine sustains ~2,000 qps when queries arrive pre-batched.
+Spark's unit of execution is a JOB: on 4 local cores a single-query
+request here is ~30 ms of driver build, broadcast and analysis plus
+~115 ms of job, and a plain 4-task Python RDD job costs ~95 ms (most of
+the ~350 ms once measured was Python worker task set-up, see
+``session.skip_unchanged_zip_rereads``). Issuing one job per single
+query from N client threads can never approach that number (BENCH_r02
+measured 10.9 qps on the reference's own concurrent section), while the
+SAME engine sustains ~2,000 qps when queries arrive pre-batched.
 
 :class:`KnnServer` closes that gap the way production model/vector
 servers do (dynamic batching): client threads call :meth:`search` with a
@@ -183,24 +186,26 @@ class KnnServer:
         removes a shuffle + second stage wave from every serve job, which
         at single-query latencies is most of the job; the merge applies
         the same ordering, so results stay identical to ``knn_join``
-        (pinned by test)."""
+        (pinned by test). The batch's query broadcast is destroyed once
+        its rows are collected, without waiting for the executors to
+        drop their copies: each broadcast leaves a file in the driver's
+        temp dir until ``destroy()``, so a long-running server would
+        otherwise grow it by one file per job."""
         import numpy as np
 
-        from pythonvectordb_spark.operators.search import scored_from_qmat
+        from pythonvectordb_spark.operators.search import _topk_scan
 
         qids = np.arange(len(qvs), dtype=np.int64)
         qmat = np.asarray(qvs, dtype=np.float32)
-        scored = scored_from_qmat(
-            self._table,
-            qids,
-            qmat,
-            self._k,
-            data_id=self._data_id,
-            query_id="query_id",
-            qvec_col=self._qvec_col,
+        scored, bc = _topk_scan(
+            self._table, qids, qmat, self._k, self._data_id, "query_id", self._qvec_col
         )
+        try:
+            rows = scored.collect()
+        finally:
+            bc.destroy(blocking=False)
         by_q: dict[int, list[tuple[int, float]]] = {}
-        for r in scored.collect():
+        for r in rows:
             by_q.setdefault(int(r["query_id"]), []).append(
                 (int(r[self._data_id]), float(r["score"]))
             )

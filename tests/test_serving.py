@@ -109,6 +109,22 @@ def test_server_coalesces_jobs(spark, qtable):
     assert n_jobs <= 6, f"expected coalescing, saw {n_jobs} jobs for 8 queries"
 
 
+def test_server_leaves_no_broadcast_files(spark, qtable):
+    """Each request's query broadcast writes a file into the driver's
+    temp dir; the server destroys it once the request is collected."""
+    import os
+
+    from pythonvectordb_spark.serving import KnnServer
+
+    temp_dir = spark.sparkContext._temp_dir
+    vecs = _query_vecs(spark, 6)
+    before = set(os.listdir(temp_dir))
+    with KnnServer(qtable, k=5, max_wait_ms=1.0) as srv:
+        for v in vecs:
+            assert len(srv.search(v)) == 5
+    assert set(os.listdir(temp_dir)) - before == set()
+
+
 def test_server_lifecycle(qtable):
     from pythonvectordb_spark.serving import KnnServer
 
