@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from pythonvectordb_spark.functions.vector import let
+
 # tiny english-ish stopword list over the testdata vocabulary
 STOPWORDS = ("the", "a", "of", "and", "to")
 
@@ -41,59 +43,27 @@ def shingles(text: Column | str, n: int = 3) -> Column:
     """Distinct word n-grams, joined by single spaces.
 
     Built with ``transform(sequence(...))`` — pure expressions, identical
-    1-based indexing to the DuckDB mirror (oracle.sql_shingles).
+    1-based indexing to the DuckDB mirror (oracle.sql_shingles). The token
+    array is let-bound, so each document is split once, not once per
+    n-gram.
     """
-    w = tokens(text)
-    # guard: Spark's sequence(1, x) with x<1 generates a *descending*
-    # sequence, so short documents must short-circuit to no shingles
-    idx = F.when(
-        F.size(w) >= F.lit(n), F.sequence(F.lit(1), F.size(w) - F.lit(n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    gram = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(w, (i + j).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.array_distinct(gram)
 
+    def grams(w: Column) -> Column:
+        # guard: Spark's sequence(1, x) with x<1 generates a *descending*
+        # sequence, so short documents must short-circuit to no shingles
+        idx = F.when(
+            F.size(w) >= F.lit(n), F.sequence(F.lit(1), F.size(w) - F.lit(n - 1))
+        ).otherwise(F.array().cast("array<int>"))
+        return F.array_distinct(
+            F.transform(
+                idx,
+                lambda i: F.concat_ws(
+                    " ", *[F.element_at(w, (i + j).cast("int")) for j in range(n)]
+                ),
+            )
+        )
 
-def shingles_fast(text: Column | str, n: int = 3) -> Column:
-    """Arrow-batched Pandas-UDF twin of :func:`shingles` — identical output
-    (pure string concatenation, first-occurrence distinct order), ~10x
-    faster than the interpreted higher-order-function expression on large
-    corpora. Used by the dedup operators; equality with the expression
-    version is pinned by tests/test_properties.py.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    nn = n
-
-    @pandas_udf(ArrayType(StringType()))
-    def _shingle(texts):
-        out = []
-        for t in texts:
-            w = [] if t is None else [x for x in t.split(" ") if x]
-            if len(w) < nn:
-                out.append([])
-            else:
-                out.append(
-                    list(dict.fromkeys(" ".join(w[i : i + nn]) for i in range(len(w) - nn + 1)))
-                )
-        return pd.Series(out)
-
-    c = F.col(text) if isinstance(text, str) else text
-    return _shingle(c)
-
-
-def minhash_value(seed: int, token_col: Column) -> Column:
-    """One MinHash family member: md5('<seed>:' || token), compared
-    lexicographically (hex strings order identically in both engines).
-    (Kept for reference/tests; the production minhash uses the two-hash
-    family below — one md5 per token instead of one per family member.)"""
-    return F.md5(F.concat(F.lit(f"{seed}:"), token_col))
+    return let(tokens(text), grams)
 
 
 # two-hash MinHash family: h_i = (A_i*h1 + B_i*h2) mod P, with h1/h2 the

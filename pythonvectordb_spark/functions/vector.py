@@ -28,6 +28,8 @@ for high-cardinality verify steps (same exact integer math).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -40,6 +42,14 @@ def _d(col: Column | str) -> Column:
     """Promote an array column to array<double> (exact for float32 inputs)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("array<double>")
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """Evaluate ``value`` once per row and pass it to ``body`` (a
+    Column -> Column lambda). Interpreted higher-order functions get no
+    common-subexpression elimination, so a per-row value captured inside
+    a lambda is otherwise recomputed for every element."""
+    return F.transform(F.array(value), body)[0]
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -65,9 +75,11 @@ def l2_normalize(col: Column | str) -> Column:
     the ``norm < 1e-10 -> leave zeros`` branch (:91-97).
     """
     v = _d(col)
-    norm = l2_norm(v)
-    return F.when(norm < F.lit(ZERO_NORM_EPS), F.transform(v, lambda _: F.lit(0.0))).otherwise(
-        F.transform(v, lambda x: x / norm)
+    return let(
+        l2_norm(v),
+        lambda norm: F.when(
+            norm < F.lit(ZERO_NORM_EPS), F.transform(v, lambda _: F.lit(0.0))
+        ).otherwise(F.transform(v, lambda x: x / norm)),
     )
 
 

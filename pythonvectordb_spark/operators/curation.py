@@ -1094,9 +1094,8 @@ def ngram_coverage(
     """
     from pythonvectordb_spark.operators.dedup import _shingled
 
-    # the Arrow shingler, not the expression one (profiled ~5x faster at
-    # sf0.1 — shingling is the per-row CPU cost); the split depends only
-    # on the id, so it projects onto the checkpointed shingle frame
+    # shingling is the per-row CPU cost; the split depends only on the
+    # id, so it projects onto the checkpointed shingle frame
     sh = _shingled(df.select(F.col(id_col), F.col(text_col)), text_col, id_col, n)
     base = hash_split(
         sh.withColumnRenamed("sh", "gs"), id_col=id_col
@@ -1464,22 +1463,20 @@ def ngram_novelty(
     equi-join on the shingle key — never a doc x doc comparison. At
     100 TB the join key would be dictionary-encoded / hashed to 64-bit;
     the string key keeps the oracle exact here and the shuffle shape is
-    identical. The shingler is the Arrow twin (`shingles_fast`,
-    bit-equal to the expression form by the pinned property test) —
-    the corpus-side explode dominates this operator's cost and the
-    Arrow batch path cuts it ~5x (round 7; the dedup family made the
-    same swap in round 2).
+    identical. The corpus-side shingle explode dominates this operator's
+    cost; `shingles` splits each document once, and the plan runs no
+    Python.
     """
-    from pythonvectordb_spark.functions.text import shingles_fast
+    from pythonvectordb_spark.functions.text import shingles
 
     corpus_grams = (
-        corpus.select(F.explode(shingles_fast(text_col, n)).alias("g")).groupBy("g").agg(
+        corpus.select(F.explode(shingles(text_col, n)).alias("g")).groupBy("g").agg(
             F.count(F.lit(1)).alias("_c")
         )
     ).select("g")
     bg = (
         batch.select(
-            F.col(id_col).alias("doc_id"), shingles_fast(text_col, n).alias("_gs")
+            F.col(id_col).alias("doc_id"), shingles(text_col, n).alias("_gs")
         )
         .select("doc_id", F.size("_gs").alias("n_shingles"), F.explode_outer("_gs").alias("g"))
     )

@@ -60,15 +60,13 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    from pythonvectordb_spark.functions.text import shingles_fast
+    from pythonvectordb_spark.functions.text import shingles
     from pythonvectordb_spark.util import ensure_parallelism
 
     # shingling is the CPU-heavy per-row step: spread it across partitions
-    # (one small parquet file = one core otherwise) and use the Arrow
-    # Pandas-UDF shingler (identical output to the expression version,
-    # pinned by test; ~10x less interpreter overhead)
+    # (one small parquet file = one core otherwise)
     return ensure_parallelism(df).select(
-        F.col(id_col), shingles_fast(text_col, n).alias("sh")
+        F.col(id_col), shingles(text_col, n).alias("sh")
     )
 
 
@@ -100,7 +98,7 @@ def ngram_jaccard_pairs(
     """
     # materialize the shingle frame once (lazy checkpoint): sizes, the
     # inverted index, the df-cap scan, and both self-join sides all read
-    # it, and without this the Arrow shingling UDF re-executes per
+    # it, and without this the shingling expression re-executes per
     # branch (shuffle reuse only dedups post-Exchange subtrees)
     sh = _shingled(df, text_col, id_col, n).localCheckpoint(eager=False)
     return jaccard_pairs_from_shingles(sh, threshold, id_col, max_df)
@@ -111,7 +109,7 @@ def _pair_common_counts(
 ) -> DataFrame:
     """(id_a, id_b, n_common) over an exploded (id, shingle) inverted
     index — the shared kernel of the exact-Jaccard/containment pair
-    reports. Shingles are distinct per document (shingles_fast dedups),
+    reports. Shingles are distinct per document (`shingles` dedups),
     so each unordered pair contributes exactly one row per shared kept
     shingle under either plan below.
 
@@ -232,7 +230,7 @@ def minhash_signatures(
 
     The shingle frame is lazily checkpointed: it feeds the signature
     pipeline AND any exact-verify join the caller builds on it — one
-    Arrow shingling pass, not one per consumer. Pass a prebuilt
+    shingling pass, not one per consumer. Pass a prebuilt
     (checkpointed) ``sh`` to share that pass with other consumers."""
     if sh is None:
         sh = _shingled(df, text_col, id_col, n).localCheckpoint(eager=False)
@@ -695,7 +693,7 @@ def method_pair_sets(
     (`pair_method_agreement`, `method_mcnemar`), which need both
     detectors over the same corpus. Run independently, each detector
     shingles, hashes and aggregates the corpus itself; fused, the two
-    share one Arrow shingle pass, one md5 inverted index, and ONE
+    share one shingle pass, one md5 inverted index, and ONE
     groupBy(id) computing the MinHash mins AND the SimHash bit votes in
     the same shuffle (round 11, guide §2.3/§2.4: two Exchanges of the
     hashed index -> one, two shingle passes -> one).
@@ -1230,7 +1228,7 @@ def minhash_estimate_error(
     them is possible but the signature agg dominates either way.
     """
     # ONE shingle pass shared by the exact-pair report and the signature
-    # pipeline (profiled at sf0.1: the Arrow shingling is a top cost and
+    # pipeline (profiled at sf0.1: shingling is a top cost and
     # running two independent operators paid it twice)
     sh = _shingled(df, text_col, id_col, n).localCheckpoint(eager=False)
     pairs = jaccard_pairs_from_shingles(

@@ -13,8 +13,10 @@ from pythonvectordb_spark.functions.text import (
     LANG_MARKERS,
     STOPWORDS,
     normalize_text,
+    shingles,
     tokens,
 )
+from pythonvectordb_spark.functions.vector import let
 
 
 def token_counts(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -401,7 +403,7 @@ def boilerplate_share(
     :func:`repetition_stats` (a doc can be internally non-repetitive yet
     99% boilerplate).
 
-    Plan: shingle (Arrow UDF) -> inverted index -> shingle-frequency
+    Plan: shingle -> inverted index -> shingle-frequency
     aggregate re-joined on the shingle key -> per-doc aggregate. Two
     map-side-combined shuffles (shingle, doc_id); never all-pairs — the
     same inverted-index shape the n-gram dedup join uses, so it scales
@@ -1017,16 +1019,18 @@ def _bpe_train(
     cur = words.localCheckpoint(eager=False)
     merges = None
     for r in range(1, n_merges + 1):
-        syms = F.split(F.col("seq"), " ")
-        pairs_arr = F.when(
-            F.size(syms) > 1,
-            F.transform(
-                F.sequence(F.lit(1), F.size(syms) - 1),
-                lambda i: F.concat(
-                    F.element_at(syms, i), F.lit(" "), F.element_at(syms, i + 1)
+        pairs_arr = let(
+            F.split(F.col("seq"), " "),
+            lambda syms: F.when(
+                F.size(syms) > 1,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(syms) - 1),
+                    lambda i: F.concat(
+                        F.element_at(syms, i), F.lit(" "), F.element_at(syms, i + 1)
+                    ),
                 ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+            ).otherwise(F.array().cast("array<string>")),
+        )
         best = (
             cur.select(F.explode(pairs_arr).alias("pair"), "wc")
             .groupBy("pair")
@@ -1957,9 +1961,8 @@ def source_vocab_jaccard(docs: DataFrame, n: int = 3) -> DataFrame:
     the phrase sets still separate (measured ~0.02-0.05 here).
 
     Determinism: distinct (source, shingle) sets from the shared
-    shingler (`functions/text.shingles_fast`, the Arrow twin pinned
-    bit-equal to the expression version by tests/test_properties.py;
-    DuckDB mirror `oracle.sql_shingles_of`), exact int64 set sizes and
+    shingler (`functions/text.shingles`; DuckDB mirror
+    `oracle.sql_shingles_of`), exact int64 set sizes and
     intersection counts; Jaccard and containments are one division
     each, ROUNDED 6.
 
@@ -1968,12 +1971,10 @@ def source_vocab_jaccard(docs: DataFrame, n: int = 3) -> DataFrame:
     never all-pairs over docs), one grouped count per pair, one
     broadcast of the G-row vocab sizes onto the G^2/2-row pair frame.
     """
-    from pythonvectordb_spark.functions.text import shingles_fast
-
     st = (
         docs.select(
             F.col("source").alias("g"),
-            F.explode(shingles_fast("text", n)).alias("tok"),
+            F.explode(shingles("text", n)).alias("tok"),
         )
         .distinct()
         .localCheckpoint(eager=False)  # both sides of the pair join + sizes

@@ -73,12 +73,6 @@ def sql_cosine_int8_lit(query: Sequence[float], qv: str, dim: int = DIM) -> str:
     )
 
 
-def sql_cosine_int8_cols(qcol: str, qv: str, dim: int = DIM) -> str:
-    """Mirror of cosine_similarity_int8 for a float query column vs int8 column."""
-    dot = " + ".join(f"({qcol}[{i + 1}]::DOUBLE * {qv}[{i + 1}]::DOUBLE)" for i in range(dim))
-    return f"(({dot}) / ({sql_l2_norm(qcol)} * {sql_int8_norm(qv)}))"
-
-
 def sql_cosine_float_lit(query: Sequence[float], col: str, dim: int = DIM) -> str:
     """Mirror of cosine_similarity (float path) against a literal query."""
     return (

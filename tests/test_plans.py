@@ -41,6 +41,23 @@ def test_knn_search_uses_take_ordered(spark):
     assert E.has_take_ordered(q)
 
 
+def test_with_qvec_folds_norm_once(spark):
+    """l2_normalize let-binds the norm: the optimized plan of with_qvec
+    holds ONE norm fold, not one per element. Degenerate rows keep their
+    shape: NULL -> NULL, [] -> [], all-zero -> all zeros."""
+    emb = S.with_qvec(load_table(spark, SF_SMOKE, "embeddings"))
+    plan = emb._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("aggregate(") == 1
+    edge = S.with_qvec(
+        spark.createDataFrame(
+            [(1, None), (2, []), (3, [0.0, 0.0, 0.0])],
+            "vec_id long, embedding array<float>",
+        )
+    )
+    got = {r.vec_id: r.qvec for r in edge.collect()}
+    assert got == {1: None, 2: [], 3: [0, 0, 0]}
+
+
 def test_projection_prunes_scan(spark):
     """A 2-column projection must not read the other columns (ReadSchema)."""
     li = load_table(spark, SF_SMOKE, "lineitem")
@@ -295,6 +312,7 @@ def test_ngram_novelty_is_anti_join_no_cartesian(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
+    assert "ArrowEvalPython" not in plan
 
 
 def test_source_compressibility_partial_aggregates(spark):

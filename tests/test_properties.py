@@ -214,29 +214,29 @@ def test_latency_log_stats(spark, emb):
     assert s.avg_ms > 0 and s.p99_ms >= s.p50_ms and s.qps_est > 0
 
 
+def _py_shingles(text, n=3):
+    """Pure-Python shingler: whitespace split, empties dropped,
+    first-occurrence distinct word n-grams."""
+    w = [] if text is None else [t for t in text.split(" ") if t]
+    return list(dict.fromkeys(" ".join(w[i : i + n]) for i in range(len(w) - n + 1)))
+
+
 def test_shingle_implementations_identical(spark):
-    """The Pandas-UDF shingler must produce exactly the expression
-    version's output (strings and first-occurrence order)."""
-    from pythonvectordb_spark.functions.text import shingles, shingles_fast
+    """The expression shingler must produce exactly the pure-Python
+    shingler's output (strings and first-occurrence order)."""
+    from pythonvectordb_spark.functions.text import shingles
     from pythonvectordb_spark.sources.testdata import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    both = docs.select(
-        "doc_id",
-        shingles("text").alias("a"),
-        shingles_fast("text").alias("b"),
-    ).collect()
-    for r in both:
-        assert list(r.a) == list(r.b), f"doc {r.doc_id}"
-    # edges: short document AND a NULL text row (ADVICE r7 — the UDF
-    # must not raise) -> empty shingles in both implementations
+    for r in docs.select("doc_id", "text", shingles("text").alias("a")).collect():
+        assert list(r.a) == _py_shingles(r.text), f"doc {r.doc_id}"
+    # edges: short document, a NULL text row (ADVICE r7 — must not
+    # raise) and an empty string -> empty shingles in both
     edge = spark.createDataFrame(
-        [(1, "one two"), (2, None)], "doc_id long, text string"
+        [(1, "one two"), (2, None), (3, "")], "doc_id long, text string"
     )
-    for r in edge.select(
-        shingles("text").alias("a"), shingles_fast("text").alias("b")
-    ).collect():
-        assert list(r.a) == [] and list(r.b) == []
+    for r in edge.select("text", shingles("text").alias("a")).collect():
+        assert list(r.a) == [] and _py_shingles(r.text) == []
 
 
 def test_embedding_near_dup_paths_identical(spark):
