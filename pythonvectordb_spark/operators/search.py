@@ -276,15 +276,6 @@ def int8_cosine_scan(data: DataFrame, qids_l, qmat_l, select, schema: str, qvec_
     bc = data.sparkSession.sparkContext.broadcast((qids_l, qmat_l, qnorm_l))
 
     def score_batches(batches):
-        # imported here, not pickled by reference: executors without the
-        # package on their path still run the kernel, just without the
-        # guard for this worker's later tasks
-        try:
-            from pythonvectordb_spark.session import skip_unchanged_zip_rereads
-        except ModuleNotFoundError:
-            pass
-        else:
-            skip_unchanged_zip_rereads()
         qids, qmat, qnorm = bc.value
         for pdf in batches:
             if len(pdf) == 0:
@@ -819,16 +810,15 @@ def ann_pq_search(
     vec_col: str = "embedding",
     code_col: str | None = None,
     rerank: int | None = None,
-    encode: str = "arrow",
 ) -> DataFrame:
     """PQ/ADC approximate nearest neighbours: approximate distance =
     sum over subspaces of the query's precomputed distance to the
     row's sub-centroid — ``m`` array lookups + adds per row, never a
     full-dimension scan.
 
-    Inline encoding (no ``code_col``) runs the Arrow kernel by default
-    (``pq_code_arrow``, bit-equal to the expression twin — pinned);
-    pass ``encode='expr'`` to force the pure-expression path.
+    Inline encoding (no ``code_col``) runs the Arrow kernel
+    (``pq_code_arrow``, bit-equal to the expression twin ``pq_code_expr``
+    — pinned).
 
     ``rerank=R`` adds the standard second stage: take the top-R ADC
     shortlist (deterministic (adc, id) tie-break), score only those R
@@ -851,12 +841,7 @@ def ann_pq_search(
     # alternative (referencing the code expression from each of the m
     # lookup terms) re-embeds the whole encoding subtree m times in the
     # plan, multiplying both analysis and per-row work
-    if code_col:
-        code = F.col(code_col)
-    elif encode == "arrow":
-        code = pq_code_arrow(vec_col, codebooks)
-    else:
-        code = pq_code_expr(vec_col, codebooks)
+    code = F.col(code_col) if code_col else pq_code_arrow(vec_col, codebooks)
     base = df.withColumn("_pq_code", code)
     adc = F.expr(
         " + ".join(

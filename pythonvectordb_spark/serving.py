@@ -5,9 +5,10 @@ is an in-process NumPy matmul behind an RLock (benchmark_suite.py:133-162).
 Spark's unit of execution is a JOB: on 4 local cores a single-query
 request here is ~30 ms of driver build, broadcast and analysis plus
 ~115 ms of job, and a plain 4-task Python RDD job costs ~95 ms (most of
-the ~350 ms once measured was Python worker task set-up, see
-``session.skip_unchanged_zip_rereads``). Issuing one job per single
-query from N client threads can never approach that number (BENCH_r02
+the ~350 ms once measured was Python worker task set-up, which the
+worker daemon now skips, see ``daemon.skip_unchanged_zip_rereads``).
+Issuing one job per single query from N client threads can never
+approach that number (BENCH_r02
 measured 10.9 qps on the reference's own concurrent section), while the
 SAME engine sustains ~2,000 qps when queries arrive pre-batched.
 

@@ -12,53 +12,8 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import os
-import zipimport
 
 from pyspark.sql import SparkSession
-
-# Cap BLAS pools before the JVM (and its Python workers) spawn: N
-# concurrent pandas-UDF tasks each opening a full-width OpenBLAS pool
-# oversubscribes the host (measured: ~3x slowdown on 32 cores).
-for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
-    os.environ.setdefault(_v, "4")
-
-
-def skip_unchanged_zip_rereads() -> None:
-    """Make ``zipimporter.invalidate_caches`` re-read an archive's central
-    directory only when the archive changed (idempotent, per process).
-
-    Spark's Python worker calls ``importlib.invalidate_caches()`` at the
-    start of EVERY task (``pyspark/worker_util.py`` setup_spark_files),
-    and on CPython 3.11 each of the worker's zipimporters then re-reads
-    its whole archive directory: 16 importers over pyspark.zip, the
-    spark-core jar and the py4j zip, 105-150 ms per task (measured on
-    CPython 3.11.7, 4 busy cores) — most of a single-query ``KnnServer``
-    request. Workers are reused, so once a task has installed this,
-    every later task in that process skips the re-read of an unchanged
-    archive.
-
-    The stamp ``(st_mtime_ns, st_size, st_ino)`` is kept per importer and
-    taken before the read it vouches for, so a change that races the
-    read triggers another read next time; each importer of a changed
-    archive re-reads on its own. If the archive cannot be stat'ed the
-    original method runs (it already handles a missing archive)."""
-    orig = zipimport.zipimporter.invalidate_caches
-    if getattr(orig, "skips_unchanged", False):
-        return
-
-    def invalidate_caches(self):
-        try:
-            st = os.stat(self.archive)
-        except OSError:
-            self._stamp = None
-            return orig(self)
-        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
-        if getattr(self, "_stamp", None) != stamp:
-            orig(self)
-            self._stamp = stamp
-
-    invalidate_caches.skips_unchanged = True
-    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def get_spark(app_name: str = "pythonvectordb-spark", master: str | None = None) -> SparkSession:
@@ -66,7 +21,17 @@ def get_spark(app_name: str = "pythonvectordb-spark", master: str | None = None)
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (driver contract);
     defaults to ``local[*]``.
+
+    Python workers fork from ``pythonvectordb_spark.daemon``, which sets
+    them up once. The package's parent directory goes on ``PYTHONPATH``
+    before the JVM starts, so local workers import the package (the
+    daemon, and UDFs pickled by reference) whatever the driver's cwd is;
+    on a cluster the package must be installed on the executors.
     """
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.environ.get("PYTHONPATH", "")
+    if parent not in path.split(os.pathsep):
+        os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (parent, path) if p)
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -78,6 +43,7 @@ def get_spark(app_name: str = "pythonvectordb-spark", master: str | None = None)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "pythonvectordb_spark.daemon")
         # let Python DataSources (sources/jsonl.py) absorb comparison
         # filters at the source instead of post-scan (4.1+ opt-in)
         .config("spark.sql.python.filterPushdown.enabled", "true")

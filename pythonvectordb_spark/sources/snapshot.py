@@ -72,41 +72,6 @@ def save_snapshot(df: DataFrame, path: str, dim: int, num_files: int | None = No
         json.dump(meta, f)
 
 
-def compact_snapshot(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    min_files: int = 1,
-) -> int:
-    """Small-file compaction: rewrite a snapshot directory into sensibly
-    sized files (the physical analogue of the reference's threshold-driven
-    ``_compact_storage``, pythonvectordb.py:465-510 — but here there are
-    no tombstones to drop, only file-count hygiene after many streaming
-    appends).
-
-    Sizes the output file count from the actual on-disk bytes (the 100 TB
-    rule: ~128 MB parquet files). Returns the new file count. Atomicity:
-    writes to a temp dir then swaps, so readers never see a half-written
-    snapshot.
-    """
-    import shutil
-
-    data_bytes = sum(
-        f.stat().st_size
-        for f in __import__("pathlib").Path(path).glob("*.parquet")
-    )
-    n_files = max(min_files, round(data_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    tmp = f"{path}__compact_tmp"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    meta_src = os.path.join(path, META_FILE)
-    if os.path.exists(meta_src):
-        shutil.copy(meta_src, os.path.join(tmp, META_FILE))
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return n_files
-
-
 def load_snapshot(spark: SparkSession, path: str, expected_dim: int | None = None) -> DataFrame:
     """Read + validate a snapshot (reference ``load``, pythonvectordb.py:584-646).
 

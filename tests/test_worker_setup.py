@@ -1,17 +1,21 @@
-"""Python worker task set-up: ``session.skip_unchanged_zip_rereads`` makes
-a zipimporter re-read its archive's directory only when the archive
-changed, and the int8 scoring kernel installs it in the workers that
-run it."""
+"""Python worker set-up: ``daemon.skip_unchanged_zip_rereads`` makes a
+zipimporter re-read its archive's directory only when the archive
+changed, and the worker daemon ``get_spark`` names installs it before it
+forks any worker. ``get_spark`` also lets workers import the package
+whatever the driver's cwd is."""
 
+import hashlib
 import importlib
+import json
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
 
-import pandas as pd
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO
 
 
 def _write_zip(path, modules):
@@ -49,7 +53,7 @@ def zip_on_path(tmp_path, monkeypatch):
 
 
 def test_zip_reread_guard_reads_only_changed_archives(zip_on_path, tmp_path):
-    from pythonvectordb_spark.session import skip_unchanged_zip_rereads
+    from pythonvectordb_spark.daemon import skip_unchanged_zip_rereads
 
     archive, reads = zip_on_path
     skip_unchanged_zip_rereads()
@@ -77,27 +81,71 @@ def test_zip_reread_guard_reads_only_changed_archives(zip_on_path, tmp_path):
     importlib.invalidate_caches()
 
 
-def test_kernel_installs_zip_reread_guard(spark):
-    """After two ``knn_join`` runs over as many partitions as cores, a
-    later task in the reused workers sees the wrapped method."""
-    from pythonvectordb_spark.operators.search import knn_join, with_qvec
-    from pythonvectordb_spark.sources.testdata import load_table
+# a task that reports whether its worker has the guard; exec'd where it is
+# used, so the task pickles by value, not by a reference to this module
+_PROBE = """
+def sees_guard(_):
+    import zipimport
 
+    yield bool(getattr(zipimport.zipimporter.invalidate_caches, "skips_unchanged", False))
+"""
+
+
+def test_every_worker_has_zip_reread_guard(spark):
+    """Tasks of a plain RDD job, in workers that never ran a package UDF,
+    see the wrapped method: the daemon installed it before forking."""
+    ns = {}
+    exec(_PROBE, ns)
     n = spark.sparkContext.defaultParallelism
-    table = with_qvec(load_table(spark, SF_SMOKE, "embeddings")).repartition(n)
-    vec = [float(x) for x in table.select("embedding").first()[0]]
-    q = spark.createDataFrame([(0, vec)], "query_id long, qvec_query array<double>")
-    for _ in range(2):
-        assert len(knn_join(table, q, k=3).collect()) == 3
+    seen = spark.sparkContext.parallelize(range(n), n).mapPartitions(ns["sees_guard"]).collect()
+    assert seen == [True] * n
 
-    def probe(batches):
-        import zipimport
 
-        for _ in batches:
-            pass
-        fn = zipimport.zipimporter.invalidate_caches
-        yield pd.DataFrame({"seen": [bool(getattr(fn, "skips_unchanged", False))]})
+_OUTSIDE_REPO = """
+import json, sys
+sys.path.insert(0, {repo!r})
+from pythonvectordb_spark.session import get_spark
+from pythonvectordb_spark.operators.media import media_features, text_as_media
+{probe}
+spark = get_spark("outside-repo", master="local[2]")
+df = spark.createDataFrame([(1, "ab"), (2, "xyz")], "doc_id long, text string")
+rows = sorted(tuple(r) for r in media_features(text_as_media(df)).collect())
+seen = spark.sparkContext.parallelize(range(2), 2).mapPartitions(sees_guard).collect()
+print(json.dumps({{"rows": rows, "seen": seen}}))
+spark.stop()
+"""
 
-    seen = [r.seen for r in table.select("vec_id").mapInPandas(probe, "seen boolean").collect()]
-    assert len(seen) == n
-    assert any(seen), seen
+_FRESH_IMPORT = """
+import json, sys
+sys.path.insert(0, {repo!r})
+import pythonvectordb_spark.daemon
+heavy = [m for m in ("numpy", "pandas", "pyarrow", "pyspark.sql") if m in sys.modules]
+import pythonvectordb_spark as pv
+missing = [n for n in pv.__all__ if getattr(pv, n, None) is None]
+print(json.dumps({{"heavy": heavy, "missing": missing}}))
+"""
+
+
+def _run(script, cwd, env):
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=cwd, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_workers_import_package_from_any_driver_cwd(tmp_path):
+    """A driver whose cwd cannot import the package still runs a UDF
+    pickled by reference (``media_features``) and gets guarded workers.
+    In a fresh interpreter the daemon module loads no numpy, pandas,
+    pyarrow or ``pyspark.sql``, and every public name resolves."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    got = _run(_OUTSIDE_REPO.format(repo=str(REPO), probe=_PROBE), tmp_path, env)
+    assert got["rows"] == [
+        [i, len(t), hashlib.md5(t.encode()).hexdigest()] for i, t in ((1, "ab"), (2, "xyz"))
+    ]
+    assert got["seen"] == [True, True]
+
+    got = _run(_FRESH_IMPORT.format(repo=str(REPO)), tmp_path, env)
+    assert got == {"heavy": [], "missing": []}
