@@ -935,9 +935,10 @@ def main() -> None:
     qps = n_queries / batch_sec
     log(f"bench knn_join batch: {n_queries} queries over {n_vec} vectors in {batch_sec:.2f}s -> {qps:.0f} qps")
 
-    # --- large-batch throughput: 32k queries, one job (broadcast qmat) ---
-    # amortizes scheduling further than the 4,096 batch; the query matrix
-    # ships as ONE torrent broadcast per executor, not per-task closure
+    # --- large-batch throughput: 32k queries, one job ---
+    # amortizes scheduling further than the 4,096 batch; the 8 MB query
+    # matrix rides in the scan's closure, which PySpark broadcasts itself
+    # because it is over 1 MB
     n_big = 32_768
     big_queries = (
         emb.crossJoin(

@@ -33,6 +33,11 @@ from pythonvectordb_spark.functions.vector import l2_normalize
 
 SEED = 42
 
+# Largest ALS item catalog whose factor matrix `als_purchase_retrieval`
+# collects to the driver and ships to every scoring task: 64 MB of
+# float32 at rank 16.
+_ALS_MAX_ITEMS = 1_000_000
+
 
 def _as_vec(df: DataFrame, vec_col: str, out: str = "features") -> DataFrame:
     return df.withColumn(out, array_to_vector(l2_normalize(vec_col)))
@@ -622,15 +627,15 @@ def als_purchase_retrieval(
     `max_iter` sweeps is a pair of shuffles keyed on the block ids, and
     nothing materializes centrally (the 100 TB path: interactions
     shuffle once to blocks, factors are rank-sized rows).
-    The recommend arm (round-11) broadcasts the catalog-bounded item
+    The recommend arm (round-11) collects the catalog-bounded item
     factor matrix (n_items x rank fp32 — the same relation MLlib's
-    recommendForUserSubset ships to executors as joined blocks) and
-    scores each user-factor Arrow batch with one fp32 gemm, emitting
-    the per-user top-``shortlist`` inside the batch — never the full
-    score matrix, no shuffle, no window; test-users x ``shortlist``
-    rows leave the pass. For item catalogs too big to broadcast, fall
-    back to recommendForUserSubset's blocked path. The popularity arm
-    broadcasts one `shortlist`-row item list. Only the 1-row verdict
+    recommendForUserSubset ships to executors as joined blocks), ships
+    it in the scoring closure, and scores each user-factor Arrow batch
+    with one fp32 gemm, emitting the per-user top-``shortlist`` inside
+    the batch — never the full score matrix, no shuffle, no window;
+    test-users x ``shortlist`` rows leave the pass. A catalog of more
+    than ``_ALS_MAX_ITEMS`` items raises ``ValueError``. The popularity
+    arm broadcasts one `shortlist`-row item list. Only the 1-row verdict
     reaches the driver.
     """
     from pyspark.ml.recommendation import ALS
@@ -709,42 +714,44 @@ def als_purchase_retrieval(
     # recommendForUserSubset is MLlib's blocked factor cross-join + per-
     # user heap — measured 4.3 s of this query's 9.4 s at sf0.1 for a
     # 15k-user x 20k-item product. Replaced with the repo's standard
-    # broadcast-matrix BLAS shape (knn_join's design): item factors are
-    # catalog-bounded (n_items x rank fp32 — the same relation MLlib
-    # ships to every executor as broadcast-joined blocks), broadcast
-    # once; each user-factor Arrow batch is scored with ONE fp32 gemm
-    # and its per-user top-``shortlist`` emitted directly — a user's
-    # whole item row lives inside the batch, so the cut is complete
-    # with no shuffle, no window, no heap. Ratings are the identical
+    # closure-matrix BLAS shape (knn_join's design): item factors are
+    # catalog-bounded (n_items x rank fp32, gated at `_ALS_MAX_ITEMS`)
+    # and ride in the scoring closure, which PySpark broadcasts itself
+    # once it is over 1 MB; each user-factor Arrow batch is scored with
+    # ONE fp32 gemm and its per-user top-``shortlist`` emitted directly
+    # — a user's whole item row lives inside the batch, so the cut is
+    # complete with no shuffle, no window, no heap. Ratings are the identical
     # fp32 dot products; only tie-breaking INSIDE an equal-score
     # boundary can differ from MLlib's heap order, and the checked
     # output (census + >=2.4x-margin hit-rate flags) is invariant to
     # boundary ties by construction.
-    item_rows = model.itemFactors.orderBy("id").collect()
+    item_rows = model.itemFactors.orderBy("id").limit(_ALS_MAX_ITEMS + 1).collect()
+    if len(item_rows) > _ALS_MAX_ITEMS:
+        raise ValueError(
+            f"als_purchase_retrieval: more than _ALS_MAX_ITEMS={_ALS_MAX_ITEMS} items to collect"
+        )
     import numpy as np
 
     iids_l = np.array([r["id"] for r in item_rows], dtype=np.int64)
     imat_l = np.vstack([r["features"] for r in item_rows]).astype(np.float32)
-    bc_items = orders.sparkSession.sparkContext.broadcast((iids_l, imat_l))
     n_short = int(shortlist)
 
     def rec_batches(batches):
         import numpy as _np
         import pandas as _pd
 
-        iids, imat = bc_items.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             U = _np.vstack(pdf["features"].to_numpy()).astype(_np.float32)
             uid = pdf["id"].to_numpy().astype(_np.int64)
-            S = U @ imat.T  # fp32, MLlib's own rating arithmetic
+            S = U @ imat_l.T  # fp32, MLlib's own rating arithmetic
             take = min(n_short, S.shape[1])
             idx = _np.argpartition(-S, take - 1, axis=1)[:, :take]
             yield _pd.DataFrame(
                 {
                     "user": _np.repeat(uid, take),
-                    "item": iids[idx.ravel()],
+                    "item": iids_l[idx.ravel()],
                     "s": S[
                         _np.arange(len(uid))[:, None], idx
                     ].ravel().astype(_np.float64),

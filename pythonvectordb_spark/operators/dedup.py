@@ -887,9 +887,10 @@ def embedding_near_dup(
     ``method='pandas'``: exact all-pairs through the one int8 cosine
     kernel (``search.int8_cosine_scan``) with the threshold selector
     (``cosine >= threshold`` and ``id_a < id_b``), blocked like the
-    miners: anchors gathered and broadcast ``MINER_ANCHOR_BLOCK`` rows
-    at a time, one corpus pass per block, passes unioned — O(n^2/P)
-    work, no n^2 row materialization, driver and per-task memory
+    miners: anchors gathered and shipped in the scan's closure
+    ``MINER_ANCHOR_BLOCK`` rows at a time, one corpus pass per block,
+    passes unioned — O(n^2/P) work, no n^2 row materialization, driver
+    and per-task memory
     bounded by the block and ``QCHUNK`` widths.
     ``method='expr'``: exact all-pairs cross-join + expression scoring
     (small inputs / oracle twin).
@@ -988,7 +989,7 @@ def embedding_near_dup(
             None,
             lambda ref_ids, ref_m, _: int8_cosine_scan(
                 q, ref_ids, ref_m, select, "id_a long, id_b long, cosine double", "qv"
-            )[0],
+            ),
         )
     else:
         raise ValueError(f"bad method {method!r}")

@@ -488,8 +488,8 @@ def hits(
     MATERIALIZED CTEs; scores round to 6 (both engines sum the same
     <=|nodes| doubles per group — the `trade_pagerank` precedent).
 
-    Scale shape (size-gated like `pagerank._iterate_small` — the
-    registered input is the nation-grain graph): ONE LINEAR PLAN, zero
+    Scale shape (the registered input is the nation-grain graph; more
+    than `_SMALL_NODES` nodes raises ``ValueError``): ONE LINEAR PLAN, zero
     per-round driver actions (round 11). The previous shape lazily
     checkpointed auth/hub and broadcast a one-row sum every round —
     localCheckpoint forces physical planning (and, under AQE, stage
@@ -502,8 +502,8 @@ def hits(
     normalization via a whole-partition window over the same non-null
     raw set the old one-row aggregate summed; every node reappears via
     one left join at the end. Alternating A/B at sf0.1: 4.5 -> 2.96 s
-    best, output exactly equal. The window's single partition is safe
-    by the same size gate as `pagerank._iterate_small`.
+    best, output exactly equal. The window's single partition holds at
+    most `_SMALL_NODES` rows, the bound `pagerank._iterate_small` uses.
     """
     e = edges.select(
         F.col(src_col).alias("src"),
@@ -517,6 +517,10 @@ def hits(
         .localCheckpoint(eager=True)
     )
     n_nodes = nodes.count()
+    if n_nodes > _SMALL_NODES:
+        raise ValueError(
+            f"hits: {n_nodes} nodes exceed _SMALL_NODES={_SMALL_NODES}"
+        )
     wall = Window.partitionBy()
     hub = nodes.select("node", F.lit(1.0 / float(n_nodes)).alias("hub"))
     auth = None
@@ -569,7 +573,8 @@ def markov_stationary(
     `event_transitions` frame) collapses to the state-grain transition
     matrix (map-side combined); the 12 rounds then run on
     |states|^2-sized broadcast joins — constant work regardless of
-    input rows. Lazy checkpoints keep the unrolled lineage linear.
+    input rows. Each round normalizes over a single-partition window,
+    so more than `_SMALL_NODES` states raises ``ValueError``.
     """
     from pyspark.sql import Window
 
@@ -598,6 +603,10 @@ def markov_stationary(
         .localCheckpoint(eager=True)
     )
     n_states = states.count()
+    if n_states > _SMALL_NODES:
+        raise ValueError(
+            f"markov_stationary: {n_states} states exceed _SMALL_NODES={_SMALL_NODES}"
+        )
     # ONE LINEAR PLAN, zero per-round driver actions (round 11 — the
     # `hits` treatment): rounds are sparse (a state with no incoming
     # mass is exactly the 0.0 the old coalesce materialized — zero

@@ -8,7 +8,7 @@ Physical shape on a cluster
                         heaps merge on the driver — the distributed analogue
                         of the reference's ``argpartition`` partial select
                         (pythonvectordb.py:147-151); no shuffle at all.
-``knn_join``            Broadcast the (small) query set, score each
+``knn_join``            Ship the (small) query set in the scan, score each
                         (query, vector) pair map-side, then a single
                         shuffle for the per-query Window top-k.
 ``ann_lsh_search``      Random-hyperplane signature buckets prune the scan:
@@ -202,9 +202,9 @@ def knn_join(
 
     ``method='pandas'`` (default, the 100 TB path): the quantized query
     matrix goes through :func:`int8_cosine_scan`, the one int8 cosine
-    kernel (broadcast matrix, one float32 BLAS matmul per Arrow batch
-    and query chunk) with the per-query partial top-k selector, then one
-    small shuffle for the global Window top-k. Work per row is a fused
+    kernel (the matrix ships in the scan's closure; one float32 BLAS
+    matmul per Arrow batch and query chunk) with the per-query partial
+    top-k selector, then one small shuffle for the global Window top-k. Work per row is a fused
     SIMD multiply-add instead of an interpreted per-element lambda —
     the same job shape, ~1000x less interpreter overhead.
 
@@ -255,42 +255,37 @@ def int8_cosine_scan(data: DataFrame, qids_l, qmat_l, select, schema: str, qvec_
     pythonvectordb.py:147-151) behind ``knn_join``, ``KnnServer``, the
     label-masked miners and exact embedding near-dup.
 
-    ``qids_l`` (int64) and ``qmat_l`` (m x dim int8-valued float32) ship
-    with their norms as ONE Spark broadcast (one torrent copy per
-    executor, not closure capture re-serialized into every task). Each
-    Arrow batch of ``data`` is stacked once and normed once, then scored
-    per ``QCHUNK`` query slice with one float32 matmul — int8 products
-    <= 128^2 and 64-term sums < 2^24 stay exact, so scores are exact
-    cosines in any chunking. ``select(pdf, qids)`` is called once per
-    batch and returns ``emit(scores, j0)``, which yields the pandas rows
-    (matching ``schema``) kept from the rows x chunk block whose column
-    ``c`` is query ``j0 + c``. Zero queries score nothing: the result is
-    a typed empty frame.
-
-    Returns ``(frame, broadcast)``. The broadcast's driver-side file
-    lives until ``destroy()``, so a caller that consumes the frame once
-    (``KnnServer``) destroys it after its collect; a lazy frame handed to
-    the user (``knn_join``, the miners) keeps it for the session."""
+    ``qids_l`` (int64) and ``qmat_l`` (m x dim int8-valued float32)
+    travel with their norms in the ``mapInPandas`` closure, which ships
+    once per stage in the task binary; PySpark broadcasts the pickled
+    closure itself once it exceeds ``spark.broadcast.
+    UDFCompressionThreshold`` (1 MB). Each Arrow batch of ``data`` is
+    stacked once and normed once, then scored per ``QCHUNK`` query slice
+    with one float32 matmul — int8 products <= 128^2 and 64-term sums
+    < 2^24 stay exact, so scores are exact cosines in any chunking.
+    ``select(pdf, qids)`` is called once per batch and returns
+    ``emit(scores, j0)``, which yields the pandas rows (matching
+    ``schema``) kept from the rows x chunk block whose column ``c`` is
+    query ``j0 + c``. Zero queries score nothing: the result is a typed
+    empty frame."""
     # axis=-1: an empty anchor block's (0,) matrix norms to a scalar
     qnorm_l = np.sqrt((qmat_l.astype(np.int64) ** 2).sum(axis=-1).astype(np.float64))
-    bc = data.sparkSession.sparkContext.broadcast((qids_l, qmat_l, qnorm_l))
 
     def score_batches(batches):
-        qids, qmat, qnorm = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             M = np.vstack(pdf[qvec_col].to_numpy()).astype(np.float32)
             vnorm = np.sqrt((M.astype(np.int64) ** 2).sum(axis=1).astype(np.float64))
-            emit = select(pdf, qids)
-            for j0 in range(0, len(qids), QCHUNK):
-                dots = (M @ qmat[j0 : j0 + QCHUNK].T).astype(np.float64)  # exact ints
-                denom = vnorm[:, None] * qnorm[j0 : j0 + QCHUNK][None, :]
+            emit = select(pdf, qids_l)
+            for j0 in range(0, len(qids_l), QCHUNK):
+                dots = (M @ qmat_l[j0 : j0 + QCHUNK].T).astype(np.float64)  # exact ints
+                denom = vnorm[:, None] * qnorm_l[j0 : j0 + QCHUNK][None, :]
                 with np.errstate(divide="ignore", invalid="ignore"):
                     scores = np.where(denom > 0, dots / denom, 0.0)
                 yield from emit(scores, j0)
 
-    return data.mapInPandas(score_batches, schema=schema), bc
+    return data.mapInPandas(score_batches, schema=schema)
 
 
 def scored_from_qmat(
@@ -306,17 +301,10 @@ def scored_from_qmat(
     selector, taking the quantized query matrix directly (``qids_l``
     int64 array, ``qmat_l`` m x dim int8-valued float32 array). Shared
     by ``knn_join`` (which collects its queries DataFrame to a matrix)
-    and, through :func:`_topk_scan`, ``serving.KnnServer`` (which already
-    holds the pending queries as Python vectors — going through a
-    queries DataFrame would add two driver jobs per coalesced
-    micro-batch for nothing). Returns the un-windowed (query_id, vec_id,
-    score) frame."""
-    return _topk_scan(data, qids_l, qmat_l, k, data_id, query_id, qvec_col)[0]
-
-
-def _topk_scan(data, qids_l, qmat_l, k, data_id, query_id, qvec_col):
-    """:func:`scored_from_qmat`'s ``(frame, broadcast)`` pair, for a
-    caller that destroys the broadcast once the frame is collected."""
+    and ``serving.KnnServer`` (which already holds the pending queries
+    as Python vectors — going through a queries DataFrame would add two
+    driver jobs per coalesced micro-batch for nothing). Returns the
+    un-windowed (query_id, vec_id, score) frame."""
 
     def select(pdf, qids):
         ids = pdf[data_id].to_numpy().astype(np.int64)
@@ -392,21 +380,19 @@ def scored_from_qmat_labeled(
     code_of = {lab: i for i, lab in enumerate(dict.fromkeys(qlabels))}
     assert None not in code_of, "anchor labels must be non-null"
     qcodes_l = np.array([code_of[lab] for lab in qlabels], dtype=np.int64)
-    bc = data.sparkSession.sparkContext.broadcast((qcodes_l, code_of))
 
     def select(pdf, qids):
-        qcodes, codes = bc.value
         ids = pdf[data_id].to_numpy().astype(np.int64)
         dcodes = (
             pdf[label_col]
-            .map(lambda x: -1 if x is None else codes.get(x, -2))
+            .map(lambda x: -1 if x is None else code_of.get(x, -2))
             .to_numpy()
             .astype(np.int64)
         )
         n = len(ids)
 
         def emit(scores, j0):
-            same = dcodes[:, None] == qcodes[j0 : j0 + scores.shape[1]][None, :]
+            same = dcodes[:, None] == qcodes_l[j0 : j0 + scores.shape[1]][None, :]
             for is_same, kk in ((True, k_same), (False, k_diff)):
                 if kk is None:
                     continue
@@ -438,14 +424,14 @@ def scored_from_qmat_labeled(
         select,
         f"{query_id} long, {data_id} long, score double, is_same int",
         qvec_col,
-    )[0]
+    )
 
 
 # Anchor-block width for the corpus-as-anchors scans (the miners and
-# exact embedding near-dup): the driver and each broadcast hold at most
-# this many anchors at a time (§5 — no full-table collect/broadcast at
-# scale). Scores are exact integers over exact norms, so any block width
-# gives bit-identical output.
+# exact embedding near-dup): the driver and each scan's closure hold at
+# most this many anchors at a time (§5 — no full-table collect at
+# scale). Scores are exact integers over exact norms, so any block
+# width gives bit-identical output.
 MINER_ANCHOR_BLOCK = 65536
 
 
@@ -1111,9 +1097,9 @@ def hard_negatives(
 
     Physical plan (guide §2.4/§4): ONE label-masked corpus pass per
     anchor block (:func:`_per_anchor_block`) — the block's anchor matrix
-    plus labels broadcast once, each Arrow batch scored by the int8
-    kernel with same-label pairs masked inside the batch
-    (``scored_from_qmat_labeled``), then the single Window top-k. The
+    plus labels shipped once in the scan's closure, each Arrow batch
+    scored by the int8 kernel with same-label pairs masked inside the
+    batch (``scored_from_qmat_labeled``), then the single Window top-k. The
     retired shape (one ``knn_join`` per label class, unioned) cost C
     corpus scans and C+1 driver jobs for identical scores; measured
     3.9 s -> 1.9 s at sf0.1 with bit-equal output. At 100 TB swap the
@@ -1252,7 +1238,7 @@ def contrastive_triplets(
     both sides already emit, keeping the boundary engine-portable.
 
     Scale shape (guide §2.4/§4): ONE corpus pass per anchor block
-    (:func:`_per_anchor_block`) scores the broadcast anchor matrix
+    (:func:`_per_anchor_block`) scores the block's anchor matrix
     against every row with the int8 kernel and emits BOTH the same-label (k=2, self
     dropped after — the positive arm) and different-label (k=1 — the
     negative arm) partial top rows (``scored_from_qmat_labeled``); the

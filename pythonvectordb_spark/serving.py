@@ -3,7 +3,7 @@
 The reference serves ~1,100 concurrent QPS because every ``search`` call
 is an in-process NumPy matmul behind an RLock (benchmark_suite.py:133-162).
 Spark's unit of execution is a JOB: on 4 local cores a single-query
-request here is ~30 ms of driver build, broadcast and analysis plus
+request here is ~30 ms of driver build and analysis plus
 ~115 ms of job, and a plain 4-task Python RDD job costs ~95 ms (most of
 the ~350 ms once measured was Python worker task set-up, which the
 worker daemon now skips, see ``daemon.skip_unchanged_zip_rereads``).
@@ -24,10 +24,10 @@ batched-knn ceiling as concurrency rises, because the number of JOBS per
 second stays flat while the queries per job grows.
 
 Scale note: on a cluster the same object runs unchanged on the driver —
-the table is a persisted DataFrame, each coalesced batch is one
-broadcast + one scan job across the executors. The coalescer is
-driver-side state, which is exactly where Spark puts every other
-scheduler decision; there is no per-query Python on the data path.
+the table is a persisted DataFrame, each coalesced batch is one scan
+job across the executors, with the batch's query matrix shipped in the
+job's closure. The coalescer is driver-side state, which is exactly
+where Spark puts every other scheduler decision; there is no per-query Python on the data path.
 """
 
 from __future__ import annotations
@@ -187,24 +187,16 @@ class KnnServer:
         removes a shuffle + second stage wave from every serve job, which
         at single-query latencies is most of the job; the merge applies
         the same ordering, so results stay identical to ``knn_join``
-        (pinned by test). The batch's query broadcast is destroyed once
-        its rows are collected, without waiting for the executors to
-        drop their copies: each broadcast leaves a file in the driver's
-        temp dir until ``destroy()``, so a long-running server would
-        otherwise grow it by one file per job."""
+        (pinned by test)."""
         import numpy as np
 
-        from pythonvectordb_spark.operators.search import _topk_scan
+        from pythonvectordb_spark.operators.search import scored_from_qmat
 
         qids = np.arange(len(qvs), dtype=np.int64)
         qmat = np.asarray(qvs, dtype=np.float32)
-        scored, bc = _topk_scan(
+        rows = scored_from_qmat(
             self._table, qids, qmat, self._k, self._data_id, "query_id", self._qvec_col
-        )
-        try:
-            rows = scored.collect()
-        finally:
-            bc.destroy(blocking=False)
+        ).collect()
         by_q: dict[int, list[tuple[int, float]]] = {}
         for r in rows:
             by_q.setdefault(int(r["query_id"]), []).append(

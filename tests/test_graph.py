@@ -182,6 +182,30 @@ def test_markov_stationary_two_state_chain(spark):
     assert out["a"].n_events == 10 and out["b"].n_events == 10
 
 
+def test_hits_and_markov_refuse_inputs_over_the_node_gate(spark, monkeypatch):
+    """Both normalize every round over a single-partition window, so a
+    node or state count above `_SMALL_NODES` raises instead of running."""
+    from pythonvectordb_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_SMALL_NODES", 2)
+    star = spark.createDataFrame(
+        [("h1", "c", 1.0), ("h2", "c", 1.0), ("h3", "c", 1.0)],
+        "src string, dst string, w double",
+    )
+    with pytest.raises(ValueError, match=r"hits: 4 nodes exceed _SMALL_NODES=2"):
+        graph.hits(star)
+    monkeypatch.setattr(graph, "_SMALL_NODES", 1)
+    rows = [
+        (i, f"2024-01-01 00:{i:02d}:00", 1, "a" if i % 2 == 0 else "b")
+        for i in range(20)
+    ]
+    events = spark.createDataFrame(
+        rows, "event_id long, ts string, user_id long, event_type string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    with pytest.raises(ValueError, match=r"markov_stationary: 2 states exceed _SMALL_NODES=1"):
+        graph.markov_stationary(events)
+
+
 def test_adamic_adar_path_graph(spark):
     """Path 1-2-3: the only candidate is (1,3) through center 2
     (deg 2): AA = 1/ln(2), n_common 1, Jaccard 1/1 (N(1)={2},

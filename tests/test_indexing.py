@@ -312,12 +312,7 @@ def test_isotonic_length_calibration_flags(spark):
     assert r.brier_beats_base_ok == 1
 
 
-def test_als_purchase_retrieval_structured_data(spark):
-    """On a block-structured purchase matrix (users buy only inside
-    their block) ALS must clear the chance floor by construction, and
-    the interaction census must be exact."""
-    from pythonvectordb_spark.indexing import als_purchase_retrieval
-
+def _block_purchases(spark):
     # 60 users x 40 items in 4 blocks of (15 users x 10 items); each
     # user buys every item of their block once -> 600 interactions
     orders, lineitem, ok = [], [], 0
@@ -327,8 +322,19 @@ def test_als_purchase_retrieval_structured_data(spark):
                 ok += 1
                 orders.append((ok, u))
                 lineitem.append((ok, it))
-    odf = spark.createDataFrame(orders, "o_orderkey long, o_custkey long")
-    ldf = spark.createDataFrame(lineitem, "l_orderkey long, l_partkey long")
+    return (
+        spark.createDataFrame(orders, "o_orderkey long, o_custkey long"),
+        spark.createDataFrame(lineitem, "l_orderkey long, l_partkey long"),
+    )
+
+
+def test_als_purchase_retrieval_structured_data(spark):
+    """On a block-structured purchase matrix (users buy only inside
+    their block) ALS must clear the chance floor by construction, and
+    the interaction census must be exact."""
+    from pythonvectordb_spark.indexing import als_purchase_retrieval
+
+    odf, ldf = _block_purchases(spark)
     (r,) = als_purchase_retrieval(odf, ldf, k=5, shortlist=24).collect()
     assert r.n_users == 60 and r.n_items == 40
     assert r.n_interactions == 600
@@ -337,6 +343,17 @@ def test_als_purchase_retrieval_structured_data(spark):
     # within-block structure is learnable: both arms clear the floor
     # (popularity concentrates on block items too since blocks are equal)
     assert r.als_hit_rate_ok == 1
+
+
+def test_als_item_collect_is_gated(spark, monkeypatch):
+    """The item factor matrix is collected to the driver, so a catalog
+    over `_ALS_MAX_ITEMS` raises instead of collecting it."""
+    from pythonvectordb_spark import indexing
+
+    monkeypatch.setattr(indexing, "_ALS_MAX_ITEMS", 10)
+    odf, ldf = _block_purchases(spark)
+    with pytest.raises(ValueError, match="_ALS_MAX_ITEMS=10"):
+        indexing.als_purchase_retrieval(odf, ldf, k=5, shortlist=24)
 
 
 def test_als_purchase_retrieval_split_is_md5(spark):

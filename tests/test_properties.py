@@ -148,36 +148,28 @@ def test_knn_join_paths_identical(spark, emb):
     assert a == b
 
 
-def test_knn_join_ships_query_matrix_via_broadcast(spark, emb, monkeypatch):
-    """The query matrix must reach executors as a Spark broadcast (one
-    torrent copy per executor), not closure capture (re-shipped per
-    task)."""
-    import numpy as np
-    from pyspark import SparkContext
+def test_kernel_callers_leave_no_broadcast_files(spark, emb):
+    """The int8 kernel's callers ship their query matrices in the scan's
+    closure, so ``knn_join``, the miners and exact near-dup leave no
+    broadcast file in the driver's temp dir (an explicit broadcast keeps
+    one there until it is destroyed)."""
+    import os
 
-    from pythonvectordb_spark.operators.search import knn_join
+    from pythonvectordb_spark.operators.dedup import embedding_near_dup
+    from pythonvectordb_spark.operators.search import hard_negatives, knn_join
     from pythonvectordb_spark.sources.testdata import load_table
 
-    shipped = []
-    orig = SparkContext.broadcast
-
-    def spy(self, value):
-        shipped.append(value)
-        return orig(self, value)
-
-    monkeypatch.setattr(SparkContext, "broadcast", spy)
-    queries = (
-        load_table(spark, SF_SMOKE, "embeddings")
-        .filter(F.col("vec_id") < 6)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec_query"))
-    )
-    out = knn_join(emb, queries, k=3, method="pandas")
-    mats = [
-        v for v in shipped
-        if isinstance(v, tuple) and len(v) == 3 and isinstance(v[1], np.ndarray)
-    ]
-    assert mats and mats[0][1].shape == (6, 64), "query matrix not broadcast"
-    assert out.count() > 0  # and the broadcast path still computes
+    raw = load_table(spark, SF_SMOKE, "embeddings")
+    temp_dir = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp_dir))
+    for lo in (0, 10, 20):
+        queries = raw.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 6)).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec_query")
+        )
+        assert knn_join(emb, queries, k=3, method="pandas").count() > 0
+    assert hard_negatives(emb, k=2).count() > 0
+    assert embedding_near_dup(raw, 0.4, method="pandas").count() > 0
+    assert set(os.listdir(temp_dir)) - before == set()
 
 
 def test_connected_components_chain_and_clique(spark):
