@@ -3,9 +3,10 @@
     python examples/serving_knn.py [sf_dir] [n_clients]
 
 The batch-vs-point-lookup mismatch, answered: every Spark job has a
-fixed cost (on 4 local cores a single-query knn job is ~30 ms of driver
-build and analysis plus ~115 ms of job, and a plain 4-task Python job
-~95 ms), which makes one-job-per-query serving structurally slow from
+fixed cost (on 4 local cores a single-query knn request over 10k cached
+vectors is ~160 ms, build and a one-task job, and an empty one-task
+Python job ~145-160 ms),
+which makes one-job-per-query serving structurally slow from
 threaded clients, while the SAME engine sustains thousands of QPS on
 pre-batched queries. ``serving.KnnServer`` closes
 the gap with dynamic query coalescing — client threads block on a

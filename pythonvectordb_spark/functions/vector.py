@@ -120,7 +120,7 @@ def cosine_similarity_int8_sym(a: Column | str, b: Column | str) -> Column:
     """Symmetric int8 cosine: BOTH sides quantized (unlike K1's float
     query). Every term is integer arithmetic — dot and norms are exact in
     any summation order, which is what makes the vectorized numpy/BLAS
-    execution path (operators.search mapInPandas) bit-identical to this
+    execution path (operators.search mapInArrow) bit-identical to this
     expression and to the DuckDB oracle.
     """
     ca = F.col(a) if isinstance(a, str) else a

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pythonvectordb_spark.functions.text import (
@@ -113,18 +113,20 @@ def _pair_common_counts(
     so each unordered pair contributes exactly one row per shared kept
     shingle under either plan below.
 
-    With ``max_df`` set (every registered caller), the doc list per
-    shingle is bounded, so pairs are emitted MAP-SIDE from one grouped
-    collect: one Exchange of the inverted index instead of three (the
-    df-cap count, then both self-join sides) — round-11 optimization,
-    1.16 -> 0.76 s on the sf0.1 kernel, output verified identical.
-    With ``max_df=None`` the grouped list is unbounded (a boilerplate
-    shingle at corpus scale would materialize one giant array row), so
-    the classic self-join — which shuffles but never materializes a
-    group — is kept for that path."""
+    With ``max_df`` set (every registered caller), pairs are emitted
+    MAP-SIDE from one grouped collect: one Exchange of the inverted
+    index instead of three (the df-cap count, then both self-join
+    sides) — round-11 optimization, 1.16 -> 0.76 s on the sf0.1
+    kernel, output verified identical. The df cap is a window count
+    over the same shingle partitioning, applied BEFORE ``collect_list``,
+    so no list ever holds more than ``max_df`` ids (the window's row
+    buffer spills; an array row cannot). With ``max_df=None`` every
+    group would be collected, so the classic self-join — which shuffles
+    but never materializes a group — is kept for that path."""
     if max_df is not None:
-        grp = inv.groupBy("shingle").agg(F.collect_list(id_col).alias("_ids"))
-        grp = grp.filter(F.size("_ids") <= max_df)
+        df_ = F.count(F.lit(1)).over(Window.partitionBy("shingle"))
+        kept = inv.withColumn("_df", df_).filter(F.col("_df") <= max_df)
+        grp = kept.groupBy("shingle").agg(F.collect_list(id_col).alias("_ids"))
         return (
             grp.select(F.explode("_ids").alias("id_a"), "_ids")
             .select("id_a", F.explode("_ids").alias("id_b"))
@@ -969,16 +971,20 @@ def embedding_near_dup(
     elif method == "pandas":
         import numpy as np
 
-        from pythonvectordb_spark.operators.search import _per_anchor_block, int8_cosine_scan
+        from pythonvectordb_spark.operators.search import (
+            _ids,
+            _per_anchor_block,
+            int8_cosine_scan,
+        )
 
-        def select(pdf, ref_ids):
-            ids = pdf[id_col].to_numpy().astype(np.int64)
+        def select(batch, ref_ids):
+            ids = _ids(batch, id_col)
 
             def emit(s, j0):
                 # only (id_a < id_b) pairs above threshold
                 ref = ref_ids[j0 : j0 + s.shape[1]]
                 r, c = np.nonzero((s >= threshold) & (ids[:, None] < ref[None, :]))
-                yield pd.DataFrame({"id_a": ids[r], "id_b": ref[c], "cosine": s[r, c]})
+                yield {"id_a": ids[r], "id_b": ref[c], "cosine": s[r, c]}
 
             return emit
 
@@ -1122,8 +1128,6 @@ def resolve_keep_best(
     (e.g. `text_quality`'s 9-dp score) and the argmax boundary is
     engine-portable (score DESC, id ASC on equal rounded scores).
     """
-    from pyspark.sql import Window
-
     comp = connected_components(pairs)
     out = (
         df.select(F.col(id_col), F.col(score_col))

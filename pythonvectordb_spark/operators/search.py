@@ -19,6 +19,7 @@ Physical shape on a cluster
 
 from __future__ import annotations
 
+from functools import lru_cache
 from itertools import islice
 from typing import Sequence
 
@@ -234,7 +235,13 @@ def knn_join(
         qids_l = np.array([r[0] for r in qrows], dtype=np.int64)
         qmat_l = np.array([r[1] for r in qrows], dtype=np.float32)  # m x dim
         scored = scored_from_qmat(
-            data, qids_l, qmat_l, k, data_id=data_id, query_id=query_id, qvec_col=qvec_col
+            data.select(data_id, qvec_col),
+            qids_l,
+            qmat_l,
+            k,
+            data_id=data_id,
+            query_id=query_id,
+            qvec_col=qvec_col,
         )
     else:
         raise ValueError(f"bad method {method!r}")
@@ -250,42 +257,83 @@ def knn_join(
 QCHUNK = 4096
 
 
+def _int8_matrix(vecs) -> np.ndarray:
+    """The (n, dim) matrix of one non-empty batch's Arrow list column,
+    read from the flattened child values with no per-row Python object.
+    A NULL vector or element, or rows of different lengths, raise
+    ``ValueError``: reshaping them would shift every later row's values
+    into the wrong row."""
+    flat = vecs.flatten()
+    if vecs.null_count or flat.null_count:
+        raise ValueError(f"int8_cosine_scan: NULL vector or element in a batch of {len(vecs)} rows")
+    lengths = np.diff(vecs.offsets.to_numpy())
+    if (lengths != lengths[0]).any():
+        raise ValueError(
+            f"int8_cosine_scan: vectors of lengths {sorted(set(lengths.tolist()))} in one batch"
+        )
+    return flat.to_numpy(zero_copy_only=False).reshape(len(vecs), lengths[0])
+
+
+@lru_cache(maxsize=None)
+def _struct_of(ddl: str):
+    """The StructType of a DDL string. Parsing goes through the JVM, and
+    a ``KnnServer`` builds one scan per request with the same schema."""
+    from pyspark.sql.types import DataType
+
+    return DataType.fromDDL(ddl)
+
+
 def int8_cosine_scan(data: DataFrame, qids_l, qmat_l, select, schema: str, qvec_col: str):
     """The one int8 cosine scoring kernel (the reference's exact scan,
     pythonvectordb.py:147-151) behind ``knn_join``, ``KnnServer``, the
     label-masked miners and exact embedding near-dup.
 
     ``qids_l`` (int64) and ``qmat_l`` (m x dim int8-valued float32)
-    travel with their norms in the ``mapInPandas`` closure, which ships
+    travel with their norms in the ``mapInArrow`` closure, which ships
     once per stage in the task binary; PySpark broadcasts the pickled
     closure itself once it exceeds ``spark.broadcast.
-    UDFCompressionThreshold`` (1 MB). Each Arrow batch of ``data`` is
-    stacked once and normed once, then scored per ``QCHUNK`` query slice
-    with one float32 matmul — int8 products <= 128^2 and 64-term sums
-    < 2^24 stay exact, so scores are exact cosines in any chunking.
-    ``select(pdf, qids)`` is called once per batch and returns
-    ``emit(scores, j0)``, which yields the pandas rows (matching
-    ``schema``) kept from the rows x chunk block whose column ``c`` is
-    query ``j0 + c``. Zero queries score nothing: the result is a typed
+    UDFCompressionThreshold`` (1 MB). Each Arrow batch's ``qvec_col``
+    becomes one (rows x dim) matrix straight from the list column's
+    values (:func:`_int8_matrix`; no pandas, no per-row objects), normed
+    once, then scored per ``QCHUNK`` query slice with one float32 matmul
+    — int8 products <= 128^2 and 64-term sums < 2^24 stay exact, so
+    scores are exact cosines in any chunking. ``select(batch, qids)`` is
+    called once per ``pyarrow.RecordBatch`` and returns
+    ``emit(scores, j0)``, which yields column dicts (the names of
+    ``schema``, numpy values) of the rows kept from the rows x chunk
+    block whose column ``c`` is query ``j0 + c``; each becomes one
+    ``RecordBatch``. Zero queries score nothing: the result is a typed
     empty frame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out_type = _struct_of(schema)
+    out_schema = to_arrow_schema(out_type)
     # axis=-1: an empty anchor block's (0,) matrix norms to a scalar
     qnorm_l = np.sqrt((qmat_l.astype(np.int64) ** 2).sum(axis=-1).astype(np.float64))
 
     def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            M = np.vstack(pdf[qvec_col].to_numpy()).astype(np.float32)
+            M = _int8_matrix(batch.column(qvec_col))
             vnorm = np.sqrt((M.astype(np.int64) ** 2).sum(axis=1).astype(np.float64))
-            emit = select(pdf, qids_l)
+            M = M.astype(np.float32)
+            emit = select(batch, qids_l)
             for j0 in range(0, len(qids_l), QCHUNK):
                 dots = (M @ qmat_l[j0 : j0 + QCHUNK].T).astype(np.float64)  # exact ints
                 denom = vnorm[:, None] * qnorm_l[j0 : j0 + QCHUNK][None, :]
                 with np.errstate(divide="ignore", invalid="ignore"):
                     scores = np.where(denom > 0, dots / denom, 0.0)
-                yield from emit(scores, j0)
+                for cols in emit(scores, j0):
+                    yield pa.RecordBatch.from_pydict(cols, schema=out_schema)
 
-    return data.mapInPandas(score_batches, schema=schema)
+    return data.mapInArrow(score_batches, out_type)
+
+
+def _ids(batch, col: str) -> np.ndarray:
+    """A batch's id column as int64 numpy."""
+    return batch.column(col).to_numpy(zero_copy_only=False).astype(np.int64)
 
 
 def scored_from_qmat(
@@ -297,17 +345,21 @@ def scored_from_qmat(
     query_id: str = "query_id",
     qvec_col: str = "qvec",
 ) -> DataFrame:
-    """:func:`int8_cosine_scan` with the per-query partial top-k
-    selector, taking the quantized query matrix directly (``qids_l``
-    int64 array, ``qmat_l`` m x dim int8-valued float32 array). Shared
-    by ``knn_join`` (which collects its queries DataFrame to a matrix)
-    and ``serving.KnnServer`` (which already holds the pending queries
-    as Python vectors — going through a queries DataFrame would add two
-    driver jobs per coalesced micro-batch for nothing). Returns the
+    """:func:`int8_cosine_scan` (a ``mapInArrow`` scan) with the
+    per-query partial top-k selector, taking the quantized query matrix
+    directly (``qids_l`` int64 array, ``qmat_l`` m x dim int8-valued
+    float32 array). Shared by ``knn_join`` (which collects its queries
+    DataFrame to a matrix) and ``serving.KnnServer`` (which already
+    holds the pending queries as Python vectors — going through a
+    queries DataFrame would add two driver jobs per coalesced
+    micro-batch for nothing; one request over 10k cached vectors in one
+    task is ~160 ms on 4 cores, build and job). ``data`` holds just
+    (``data_id``, ``qvec_col``) — any other column would travel to
+    Python for nothing — so both callers project it first. Returns the
     un-windowed (query_id, vec_id, score) frame."""
 
-    def select(pdf, qids):
-        ids = pdf[data_id].to_numpy().astype(np.int64)
+    def select(batch, qids):
+        ids = _ids(batch, data_id)
         n = len(ids)
         take = min(k, n)
 
@@ -321,23 +373,19 @@ def scored_from_qmat(
             if take < n:
                 kth = np.partition(scores, n - take, axis=0)[n - take, :]
                 r, c = np.nonzero(scores >= kth[None, :])
-                yield pd.DataFrame(
-                    {query_id: qids[j0 + c], data_id: ids[r], "score": scores[r, c]}
-                )
+                yield {query_id: qids[j0 + c], data_id: ids[r], "score": scores[r, c]}
             else:
                 nq = scores.shape[1]
-                yield pd.DataFrame(
-                    {
-                        query_id: np.repeat(qids[j0 : j0 + nq], n),
-                        data_id: np.tile(ids, nq),
-                        "score": scores.T.reshape(-1),
-                    }
-                )
+                yield {
+                    query_id: np.repeat(qids[j0 : j0 + nq], n),
+                    data_id: np.tile(ids, nq),
+                    "score": scores.T.reshape(-1),
+                }
 
         return emit
 
     return int8_cosine_scan(
-        data.select(F.col(data_id), F.col(qvec_col)),
+        data,
         qids_l,
         qmat_l,
         select,
@@ -368,6 +416,9 @@ def scored_from_qmat_labeled(
     downstream sees the per-class plan's exact candidates. Returns the
     un-windowed (query_id, vec_id, score, is_same int) frame.
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     # NULL-label parity with the per-class plan (ADVICE r10): the old
     # shape iterated over non-null label classes, filtering the corpus
     # with `label == lab` / `label != lab` — both NULL for a NULL-label
@@ -381,14 +432,12 @@ def scored_from_qmat_labeled(
     assert None not in code_of, "anchor labels must be non-null"
     qcodes_l = np.array([code_of[lab] for lab in qlabels], dtype=np.int64)
 
-    def select(pdf, qids):
-        ids = pdf[data_id].to_numpy().astype(np.int64)
-        dcodes = (
-            pdf[label_col]
-            .map(lambda x: -1 if x is None else code_of.get(x, -2))
-            .to_numpy()
-            .astype(np.int64)
-        )
+    def select(batch, qids):
+        ids = _ids(batch, data_id)
+        labels = batch.column(label_col)
+        # code = position in code_of's keys; unknown -> -2, NULL -> -1
+        pos = pc.index_in(labels, value_set=pa.array(list(code_of), type=labels.type))
+        dcodes = pc.if_else(labels.is_null(), -1, pos.fill_null(-2)).to_numpy().astype(np.int64)
         n = len(ids)
 
         def emit(scores, j0):
@@ -406,14 +455,12 @@ def scored_from_qmat_labeled(
                 take = min(kk, n)
                 kth = np.partition(masked, n - take, axis=0)[n - take, :]
                 r, c = np.nonzero((masked >= kth[None, :]) & valid)
-                yield pd.DataFrame(
-                    {
-                        query_id: qids[j0 + c],
-                        data_id: ids[r],
-                        "score": scores[r, c],
-                        "is_same": np.full(len(r), int(is_same), dtype=np.int32),
-                    }
-                )
+                yield {
+                    query_id: qids[j0 + c],
+                    data_id: ids[r],
+                    "score": scores[r, c],
+                    "is_same": np.full(len(r), int(is_same), dtype=np.int32),
+                }
 
         return emit
 

@@ -233,7 +233,7 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def o_knn_join() -> str:
     # symmetric int8 scoring: both sides quantized -> exact integer dot and
     # norms, identical under any summation order (mirrors
-    # cosine_similarity_int8_sym and the numpy mapInPandas path)
+    # cosine_similarity_int8_sym and the numpy mapInArrow path)
     qv = O.sql_qvec("embedding")
     return f"""
 WITH data AS (SELECT vec_id, {qv} AS qvec FROM embeddings),

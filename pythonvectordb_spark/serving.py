@@ -3,10 +3,13 @@
 The reference serves ~1,100 concurrent QPS because every ``search`` call
 is an in-process NumPy matmul behind an RLock (benchmark_suite.py:133-162).
 Spark's unit of execution is a JOB: on 4 local cores a single-query
-request here is ~30 ms of driver build and analysis plus
-~115 ms of job, and a plain 4-task Python RDD job costs ~95 ms (most of
-the ~350 ms once measured was Python worker task set-up, which the
-worker daemon now skips, see ``daemon.skip_unchanged_zip_rereads``).
+request over 10k cached vectors (driver build and analysis, then a
+one-task ``mapInArrow`` job) takes ~160 ms, against ~145-160 ms for an
+empty one-task Python job and ~95-115 ms for a JVM-only one. The server
+sizes each request's scan to the table's rows times the batch's queries
+(``SERVE_ROWS_PER_TASK``, ``SERVE_QUERIES_PER_ROW``): one Python task for
+a single query up to 12,500 rows, where the former 4-task
+``mapInPandas`` scan took ~220 ms.
 Issuing one job per single query from N client threads can never
 approach that number (BENCH_r02
 measured 10.9 qps on the reference's own concurrent section), while the
@@ -65,6 +68,21 @@ def quantize_query(vec: Sequence[float]) -> list[int]:
     return out
 
 
+# Rows per scan task of a single-query request. Each Python task costs
+# tens of ms of set-up and scheduling whatever its size, so a table is
+# split only where scoring its rows takes longer than that. Measured on
+# 4 cores (64-dim vectors, one query): 1 task was fastest at 10k rows,
+# 2 tasks at 15k-25k, and 4 tasks at 100k and 400k rows.
+SERVE_ROWS_PER_TASK = 12_500
+# Scoring and top-k selection grow with rows x queries, so a batch of q
+# queries weighs each row 1 + (q - 1) / SERVE_QUERIES_PER_ROW. Measured
+# on 4 cores (k=10): over 10k rows 1 task was fastest up to 64 queries
+# and 2 tasks from 128 to 1,024; over 25k rows 4 tasks at 512. With 256,
+# 10k rows get 2 tasks at 128-256 queries, 3 at 512 and 4 at 1,024, none
+# slower than the table's own 4 partitions.
+SERVE_QUERIES_PER_ROW = 256
+
+
 class KnnServer:
     """Dynamic-batching knn server over a cached quantized table.
 
@@ -87,7 +105,12 @@ class KnnServer:
     ) -> None:
         from concurrent.futures import ThreadPoolExecutor
 
-        self._table = table
+        # every request scans the whole table: project it and count its
+        # rows once; each request then sizes its scan (_scan_table)
+        self._table = table.select(data_id, qvec_col)
+        self._rows = table.count()
+        self._cores = table.sparkSession.sparkContext.defaultParallelism
+        self._scans: dict[int, DataFrame] = {}  # task count -> coalesced table
         self._k = k
         self._max_batch = max_batch
         self._max_wait_s = max_wait_ms / 1000.0
@@ -174,16 +197,38 @@ class KnnServer:
         for i, (_, fut) in enumerate(batch):
             fut.set_result(results.get(i, []))
 
+    def _scan_table(self, n_queries: int) -> DataFrame:
+        """The table coalesced to the scan tasks of one request:
+        ceil(rows x (1 + (n_queries - 1) / SERVE_QUERIES_PER_ROW) /
+        SERVE_ROWS_PER_TASK), at least 1 and at most the cores. Coalesce
+        is narrow (no shuffle, never more tasks than the table's
+        partitions), so a small table is read by one Python task and a
+        large batch keeps the table's own partitioning. Each coalesced
+        frame is built once, so a request adds no plan node to analyse."""
+        import math
+
+        work = self._rows * (1 + (n_queries - 1) / SERVE_QUERIES_PER_ROW)
+        tasks = min(max(1, math.ceil(work / SERVE_ROWS_PER_TASK)), self._cores)
+        scan = self._scans.get(tasks)
+        if scan is None:
+            scan = self._scans[tasks] = self._table.coalesce(tasks)
+        return scan
+
     def _execute(self, qvs: list[list[int]]) -> dict[int, list[tuple[int, float]]]:
         """One batched knn job for the coalesced queries (positional ids).
 
         Single-stage: the scan is ``scored_from_qmat`` — the one int8
-        cosine kernel (``operators.search.int8_cosine_scan``) with the
-        per-query partial top-k selector — emitting each Arrow batch's
-        partial top-k per query (a superset of that batch's contribution
-        to the global top-k), and the GLOBAL (score desc, id asc) merge
-        happens on the driver over the collected partials — bounded at
-        ~k x partitions x queries rows. Skipping ``knn_join``'s Window
+        cosine kernel (``operators.search.int8_cosine_scan``, a
+        ``mapInArrow`` over the table coalesced to this batch's scan
+        tasks, :meth:`_scan_table`) with the per-query partial top-k
+        selector —
+        emitting each Arrow batch's partial top-k per query (a superset
+        of that batch's contribution to the global top-k), and the
+        GLOBAL (score desc, id asc) merge happens on the driver over the
+        collected partials — bounded at ~k x scan tasks x queries rows
+        (one task below ``SERVE_ROWS_PER_TASK`` rows: ~160 ms per
+        single-query request on 4 cores; 512 queries over 10k rows in 3
+        tasks: ~420 ms). Skipping ``knn_join``'s Window
         removes a shuffle + second stage wave from every serve job, which
         at single-query latencies is most of the job; the merge applies
         the same ordering, so results stay identical to ``knn_join``
@@ -194,8 +239,9 @@ class KnnServer:
 
         qids = np.arange(len(qvs), dtype=np.int64)
         qmat = np.asarray(qvs, dtype=np.float32)
+        scan = self._scan_table(len(qvs))
         rows = scored_from_qmat(
-            self._table, qids, qmat, self._k, self._data_id, "query_id", self._qvec_col
+            scan, qids, qmat, self._k, self._data_id, "query_id", self._qvec_col
         ).collect()
         by_q: dict[int, list[tuple[int, float]]] = {}
         for r in rows:

@@ -172,6 +172,26 @@ def test_kernel_callers_leave_no_broadcast_files(spark, emb):
     assert set(os.listdir(temp_dir)) - before == set()
 
 
+def test_kernel_rejects_null_and_ragged_vectors(spark):
+    """The kernel reads a batch's vectors as one flat value buffer
+    reshaped to (rows, dim): a NULL vector, or rows of different
+    lengths, would shift values into the wrong rows, so it raises a
+    ``ValueError`` that names the fault instead."""
+    from pyspark.errors import PythonException
+
+    from pythonvectordb_spark.operators.search import scored_from_qmat
+
+    qids = np.arange(1, dtype=np.int64)
+    qmat = np.array([[1, 2]], dtype=np.float32)
+    for rows, fault in (
+        ([(1, [1, 2]), (2, None), (3, [3, 4])], "NULL vector"),
+        ([(1, [1, 2]), (2, [1, 2, 3]), (3, [3, 4])], r"vectors of lengths \[2, 3\]"),
+    ):
+        data = spark.createDataFrame(rows, "vec_id long, qvec array<tinyint>").coalesce(1)
+        with pytest.raises(PythonException, match=f"ValueError: int8_cosine_scan: .*{fault}"):
+            scored_from_qmat(data, qids, qmat, 1).collect()
+
+
 def test_connected_components_chain_and_clique(spark):
     """Min-label propagation must handle transitive chains (a-b, b-c) and
     leave singletons alone."""
@@ -1882,7 +1902,8 @@ def test_pair_common_counts_grouped_equals_self_join(spark):
     self-join's (id_a, id_b, n_common) multiset — including the df-cap
     semantics (a shingle shared by more than max_df docs contributes no
     pairs and no common counts). max_df=2 on a real corpus forces the
-    cap to bite."""
+    cap to bite. The cap is applied before ``collect_list``, so no
+    grouped list ever holds more than max_df ids."""
     from pythonvectordb_spark.operators.dedup import (
         _pair_common_counts,
         _shingled,
@@ -1893,10 +1914,14 @@ def test_pair_common_counts_grouped_equals_self_join(spark):
     sh = _shingled(docs, "text", "doc_id", 3).localCheckpoint(eager=False)
     inv = sh.select(F.col("doc_id"), F.explode("sh").alias("shingle"))
     for max_df in (2, 50):
-        grouped = {
-            (r.id_a, r.id_b): r.n_common
-            for r in _pair_common_counts(inv, "doc_id", max_df).collect()
-        }
+        got = _pair_common_counts(inv, "doc_id", max_df)
+        grouped = {(r.id_a, r.id_b): r.n_common for r in got.collect()}
+        # the cap's Filter sits BELOW (later in the tree string than) the
+        # collect_list Aggregate, i.e. it runs first
+        lines = got._jdf.queryExecution().optimizedPlan().toString().splitlines()
+        collect_at = next(i for i, ln in enumerate(lines) if "collect_list" in ln)
+        cap_at = next(i for i, ln in enumerate(lines) if f"<= {max_df})" in ln)
+        assert cap_at > collect_at, "\n".join(lines)
         # the max_df=None branch IS the classic self-join; apply the cap
         # externally so both plans see the identical kept inverted index
         keep = inv.groupBy("shingle").count().filter(F.col("count") <= max_df)

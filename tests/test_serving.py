@@ -104,14 +104,15 @@ def test_server_coalesces_jobs(spark, qtable):
         for t in threads:
             t.join()
         n_jobs = len(tracker.getJobIdsForGroup()) - before
-    # one coalesced batch = 2 jobs (mapInPandas scan + window collect may
+    # one coalesced batch = 2 jobs (mapInArrow scan + window collect may
     # fuse to 1-2 jobs depending on AQE); 8 uncoalesced singles would be >=8
     assert n_jobs <= 6, f"expected coalescing, saw {n_jobs} jobs for 8 queries"
 
 
 def test_server_leaves_no_broadcast_files(spark, qtable):
-    """Each request's query broadcast writes a file into the driver's
-    temp dir; the server destroys it once the request is collected."""
+    """Each request's query matrix ships in the scan's closure, not in an
+    explicit broadcast, so requests leave no file in the driver's temp
+    dir."""
     import os
 
     from pythonvectordb_spark.serving import KnnServer
@@ -123,6 +124,52 @@ def test_server_leaves_no_broadcast_files(spark, qtable):
         for v in vecs:
             assert len(srv.search(v)) == 5
     assert set(os.listdir(temp_dir)) - before == set()
+
+
+def test_server_scans_small_table_in_one_task(spark, qtable):
+    """The fixture table is far below ``SERVE_ROWS_PER_TASK`` rows, so a
+    single query and a full ``max_batch`` of queries both scan it in one
+    Python task, however many partitions the cached table has."""
+    from pythonvectordb_spark.serving import KnnServer
+
+    table = qtable.repartition(spark.sparkContext.defaultParallelism)
+    with KnnServer(table, k=3) as srv:
+        assert srv._scan_table(1).rdd.getNumPartitions() == 1
+        assert srv._scan_table(1024).rdd.getNumPartitions() == 1
+
+
+def test_server_scan_tasks_follow_row_count(spark, qtable, monkeypatch):
+    """With the rows-per-task gate lowered, a request plans
+    min(defaultParallelism, ceil(rows x (1 + (q - 1) / SERVE_QUERIES_PER_ROW)
+    / SERVE_ROWS_PER_TASK)) scan tasks for q queries (coalesce never adds
+    any), and single and batched requests still answer like
+    ``knn_join``."""
+    import math
+
+    from pythonvectordb_spark import serving
+
+    cores = spark.sparkContext.defaultParallelism
+    table = qtable.repartition(2 * cores)
+    rows = table.count()
+    vecs = _query_vecs(spark, 3)
+    for per_task in (rows, math.ceil(rows / 2), math.ceil(rows / (2 * cores)), 1):
+        monkeypatch.setattr(serving, "SERVE_ROWS_PER_TASK", per_task)
+        with serving.KnnServer(table, k=10, max_wait_ms=1.0) as srv:
+            want = min(cores, math.ceil(rows / per_task))
+            assert srv._scan_table(1).rdd.getNumPartitions() == want, per_task
+            if per_task == 1:
+                assert srv.search(vecs[0]) == _knn_join_single(spark, qtable, vecs[0])
+    # a batch of 1 + 2 x SERVE_QUERIES_PER_ROW queries weighs each row 3x
+    monkeypatch.setattr(serving, "SERVE_ROWS_PER_TASK", rows)
+    with serving.KnnServer(table, k=10) as srv:
+        batch = 1 + 2 * serving.SERVE_QUERIES_PER_ROW
+        assert srv._scan_table(batch).rdd.getNumPartitions() == min(cores, 3)
+        monkeypatch.setattr(serving, "SERVE_QUERIES_PER_ROW", 1)
+        assert srv._scan_table(len(vecs)).rdd.getNumPartitions() == min(cores, 3)
+        got = srv._execute([serving.quantize_query(v) for v in vecs])
+        assert [got[i] for i in range(len(vecs))] == [
+            _knn_join_single(spark, qtable, v) for v in vecs
+        ]
 
 
 def test_server_lifecycle(qtable):
