@@ -1013,7 +1013,8 @@ def main() -> None:
         [float(x) for x in r.embedding] for r in emb.limit(256).collect()
     ]
 
-    def serve_qps(n_threads: int, n_queries: int) -> float:
+    def serve_qps(n_threads: int, n_queries: int) -> tuple[float, dict]:
+        """(qps, the server's stats() over the timed requests' tail)."""
         qs = (queries_co * ((n_queries + 255) // 256))[:n_queries]
         with KnnServer(
             serve_table, k=10, max_batch=512, max_wait_ms=8.0, max_inflight=4
@@ -1023,7 +1024,8 @@ def main() -> None:
             with ThreadPoolExecutor(max_workers=n_threads) as ex:
                 list(ex.map(srv.search, qs))
             sec = time.time() - t0
-        return n_queries / sec
+            stats = srv.stats()
+        return n_queries / sec, stats
 
     # same 8-client shape as the raw number above, then the scaling
     # story: throughput grows with offered concurrency (more queries
@@ -1032,9 +1034,15 @@ def main() -> None:
     # single window swung 2.4x across rounds on host scheduling noise;
     # min-of-N elapsed = max-of-N qps is the same steady-state
     # estimator every other timed section uses).
-    concurrent_qps_coalesced = serve_qps(8, 256)
-    concurrent_qps_coalesced_64 = max(serve_qps(64, 1024) for _ in range(2))
-    concurrent_qps_coalesced_256 = max(serve_qps(256, 4096) for _ in range(2))
+    # Each point carries the best window's end-to-end p50/p99 (ms) from
+    # KnnServer.stats(): its last MAX_LATENCIES requests.
+    concurrent_qps_coalesced, serve_stats_8 = serve_qps(8, 256)
+    concurrent_qps_coalesced_64, serve_stats_64 = max(
+        (serve_qps(64, 1024) for _ in range(2)), key=lambda r: r[0]
+    )
+    concurrent_qps_coalesced_256, serve_stats_256 = max(
+        (serve_qps(256, 4096) for _ in range(2)), key=lambda r: r[0]
+    )
     # pinned floor: coalescing must beat the raw per-job path by >= 5x
     # at 256 clients — if this ever reads False in a round's JSON, the
     # serving path regressed (not just host variance; the raw number is
@@ -1331,12 +1339,18 @@ def main() -> None:
             "knn_single_ms": round(single_ms, 1),
             "concurrent_qps": round(concurrent_qps, 1),
             "concurrent_qps_coalesced": round(concurrent_qps_coalesced, 1),
+            "concurrent_coalesced_p50_ms": round(serve_stats_8["e2e_ms_p50"], 1),
+            "concurrent_coalesced_p99_ms": round(serve_stats_8["e2e_ms_p99"], 1),
             "concurrent_qps_coalesced_64clients": round(
                 concurrent_qps_coalesced_64, 1
             ),
+            "concurrent_coalesced_64clients_p50_ms": round(serve_stats_64["e2e_ms_p50"], 1),
+            "concurrent_coalesced_64clients_p99_ms": round(serve_stats_64["e2e_ms_p99"], 1),
             "concurrent_qps_coalesced_256clients": round(
                 concurrent_qps_coalesced_256, 1
             ),
+            "concurrent_coalesced_256clients_p50_ms": round(serve_stats_256["e2e_ms_p50"], 1),
+            "concurrent_coalesced_256clients_p99_ms": round(serve_stats_256["e2e_ms_p99"], 1),
             "coalesced_floor_ok": bool(coalesced_floor_ok),
             "knn_qps_50k_32k_batch": round(qps_32k, 1),
             # Control marker sits NEXT TO the headline qps (VERDICT r6

@@ -4,8 +4,8 @@
 
 The batch-vs-point-lookup mismatch, answered: every Spark job has a
 fixed cost (on 4 local cores a single-query knn request over 10k cached
-vectors is ~160 ms, build and a one-task job, and an empty one-task
-Python job ~145-160 ms),
+vectors is ~110 ms, one job over a scan the server planned once, and a
+cold empty one-task Python job ~145-160 ms),
 which makes one-job-per-query serving structurally slow from
 threaded clients, while the SAME engine sustains thousands of QPS on
 pre-batched queries. ``serving.KnnServer`` closes
@@ -20,6 +20,8 @@ reports their measured throughput side by side:
   * ``raw_qps``        — one knn job per query from each client thread
                          (the anti-pattern, bounded by the job floor)
   * ``coalesced_qps``  — the same client threads through KnnServer
+  * ``coalesced_p50_ms`` / ``coalesced_p99_ms`` — their end-to-end
+                         latency from ``KnnServer.stats()``
   * ``parity``         — server results == knn_join's rows, per query
 
 Defaults to the sf0.001 testdata and 32 clients so it runs in seconds;
@@ -92,6 +94,9 @@ def run(sf_dir: str = "/root/testdata/sf0.001", n_clients: int = 32) -> dict:
             for t in threads:
                 t.join()
             out["coalesced_qps"] = round(n_clients / (time.monotonic() - t0), 1)
+            lat = srv.stats()
+            out["coalesced_p50_ms"] = round(lat["e2e_ms_p50"], 1)
+            out["coalesced_p99_ms"] = round(lat["e2e_ms_p99"], 1)
 
         # -- parity: coalescing must not change a single row ------------
         out["parity"] = srv_results == raw_results

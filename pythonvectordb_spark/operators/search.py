@@ -277,10 +277,50 @@ def _int8_matrix(vecs) -> np.ndarray:
 @lru_cache(maxsize=None)
 def _struct_of(ddl: str):
     """The StructType of a DDL string. Parsing goes through the JVM, and
-    a ``KnnServer`` builds one scan per request with the same schema."""
+    ``knn_join`` and the miners build one scan per call with the same
+    schema."""
     from pyspark.sql.types import DataType
 
     return DataType.fromDDL(ddl)
+
+
+# The job-local property (``SparkContext.setLocalProperty``) that carries
+# the queries of a scan planned without a query matrix: "<dim>:<base64 of
+# the row-major int8 matrix>" (:func:`encode_queries`). Query ids are
+# positions in the matrix.
+QUERIES_PROPERTY = "pythonvectordb_spark.queries"
+
+
+def encode_queries(qvs) -> str:
+    """The :data:`QUERIES_PROPERTY` value of a non-empty list of
+    int8-valued query vectors of one nonzero length."""
+    import base64
+
+    qmat = np.asarray(qvs, dtype=np.int8)
+    return f"{qmat.shape[1]}:{base64.b64encode(qmat.tobytes()).decode('ascii')}"
+
+
+def _norms(qmat) -> np.ndarray:
+    # axis=-1: an empty anchor block's (0,) matrix norms to a scalar
+    return np.sqrt((qmat.astype(np.int64) ** 2).sum(axis=-1).astype(np.float64))
+
+
+def _property_queries():
+    """(qids, qmat, qnorm) of the running job's :data:`QUERIES_PROPERTY`,
+    read in the Python worker once per task."""
+    import base64
+
+    from pyspark import TaskContext
+
+    value = TaskContext.get().getLocalProperty(QUERIES_PROPERTY)
+    if value is None:
+        raise ValueError(
+            f"int8_cosine_scan: a scan planned without queries ran without "
+            f"the job-local property {QUERIES_PROPERTY!r}"
+        )
+    dim, b64 = value.split(":", 1)
+    qmat = np.frombuffer(base64.b64decode(b64), dtype=np.int8).reshape(-1, int(dim))
+    return np.arange(len(qmat), dtype=np.int64), qmat.astype(np.float32), _norms(qmat)
 
 
 def int8_cosine_scan(data: DataFrame, qids_l, qmat_l, select, schema: str, qvec_col: str):
@@ -292,12 +332,17 @@ def int8_cosine_scan(data: DataFrame, qids_l, qmat_l, select, schema: str, qvec_
     travel with their norms in the ``mapInArrow`` closure, which ships
     once per stage in the task binary; PySpark broadcasts the pickled
     closure itself once it exceeds ``spark.broadcast.
-    UDFCompressionThreshold`` (1 MB). Each Arrow batch's ``qvec_col``
-    becomes one (rows x dim) matrix straight from the list column's
-    values (:func:`_int8_matrix`; no pandas, no per-row objects), normed
-    once, then scored per ``QCHUNK`` query slice with one float32 matmul
-    — int8 products <= 128^2 and 64-term sums < 2^24 stay exact, so
-    scores are exact cosines in any chunking. ``select(batch, qids)`` is
+    UDFCompressionThreshold`` (1 MB). With both ``None`` the plan holds
+    no queries: each task reads them from the job-local
+    :data:`QUERIES_PROPERTY` of the job that runs it (positional ids), so
+    one planned frame serves any number of query batches, each collected
+    with its own property (``serving.KnnServer``). Each Arrow batch's
+    ``qvec_col`` becomes one (rows x dim) matrix straight from the list
+    column's values (:func:`_int8_matrix`; no pandas, no per-row
+    objects), normed once, then scored per ``QCHUNK`` query slice with
+    one float32 matmul — int8 products <= 128^2 and 64-term sums < 2^24
+    stay exact, so scores are exact cosines in any chunking.
+    ``select(batch, qids)`` is
     called once per ``pyarrow.RecordBatch`` and returns
     ``emit(scores, j0)``, which yields column dicts (the names of
     ``schema``, numpy values) of the rows kept from the rows x chunk
@@ -309,20 +354,23 @@ def int8_cosine_scan(data: DataFrame, qids_l, qmat_l, select, schema: str, qvec_
 
     out_type = _struct_of(schema)
     out_schema = to_arrow_schema(out_type)
-    # axis=-1: an empty anchor block's (0,) matrix norms to a scalar
-    qnorm_l = np.sqrt((qmat_l.astype(np.int64) ** 2).sum(axis=-1).astype(np.float64))
+    qnorm_l = None if qmat_l is None else _norms(qmat_l)
 
     def score_batches(batches):
+        if qmat_l is None:
+            qids, qmat, qnorm = _property_queries()
+        else:
+            qids, qmat, qnorm = qids_l, qmat_l, qnorm_l
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             M = _int8_matrix(batch.column(qvec_col))
             vnorm = np.sqrt((M.astype(np.int64) ** 2).sum(axis=1).astype(np.float64))
             M = M.astype(np.float32)
-            emit = select(batch, qids_l)
-            for j0 in range(0, len(qids_l), QCHUNK):
-                dots = (M @ qmat_l[j0 : j0 + QCHUNK].T).astype(np.float64)  # exact ints
-                denom = vnorm[:, None] * qnorm_l[j0 : j0 + QCHUNK][None, :]
+            emit = select(batch, qids)
+            for j0 in range(0, len(qids), QCHUNK):
+                dots = (M @ qmat[j0 : j0 + QCHUNK].T).astype(np.float64)  # exact ints
+                denom = vnorm[:, None] * qnorm[j0 : j0 + QCHUNK][None, :]
                 with np.errstate(divide="ignore", invalid="ignore"):
                     scores = np.where(denom > 0, dots / denom, 0.0)
                 for cols in emit(scores, j0):
@@ -349,11 +397,12 @@ def scored_from_qmat(
     per-query partial top-k selector, taking the quantized query matrix
     directly (``qids_l`` int64 array, ``qmat_l`` m x dim int8-valued
     float32 array). Shared by ``knn_join`` (which collects its queries
-    DataFrame to a matrix) and ``serving.KnnServer`` (which already
-    holds the pending queries as Python vectors — going through a
-    queries DataFrame would add two driver jobs per coalesced
-    micro-batch for nothing; one request over 10k cached vectors in one
-    task is ~160 ms on 4 cores, build and job). ``data`` holds just
+    DataFrame to a matrix) and ``serving.KnnServer``, which plans it
+    once with ``qids_l = qmat_l = None`` and collects it per coalesced
+    micro-batch with the batch's queries in the job-local
+    ``QUERIES_PROPERTY`` (going through a queries DataFrame would add
+    two driver jobs per batch for nothing; one request over 10k cached
+    vectors in one task is ~110 ms on 4 cores). ``data`` holds just
     (``data_id``, ``qvec_col``) — any other column would travel to
     Python for nothing — so both callers project it first. Returns the
     un-windowed (query_id, vec_id, score) frame."""

@@ -31,6 +31,7 @@ def test_serving_knn_example_runs(spark):
     s = run("/root/testdata/sf0.001", n_clients=8)
     assert s["parity"], "server results must equal per-query knn_join"
     assert s["raw_qps"] > 0 and s["coalesced_qps"] > 0
+    assert 0 < s["coalesced_p50_ms"] <= s["coalesced_p99_ms"]
     assert s["n_clients"] == 8
 
 

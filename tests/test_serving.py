@@ -2,6 +2,7 @@
 knn_join, correct scatter under real thread concurrency, quantize parity
 with the expression path, lifecycle."""
 
+import sys
 import threading
 
 import pytest
@@ -180,3 +181,192 @@ def test_server_lifecycle(qtable):
     srv.close()  # idempotent
     with pytest.raises(RuntimeError):
         srv.search([0.0] * 64)
+
+
+def test_server_plans_its_scan_once(spark, qtable, monkeypatch):
+    """After the first request, single requests build no new scan: the
+    planned frame is collected again with the request's queries in a
+    job-local property, and the answers still equal ``knn_join``'s."""
+    from pyspark.sql import DataFrame
+
+    from pythonvectordb_spark.serving import KnnServer
+
+    vecs = _query_vecs(spark, 4)
+    want = [_knn_join_single(spark, qtable, v) for v in vecs]
+    calls = []
+    map_in_arrow = DataFrame.mapInArrow
+    with KnnServer(qtable, k=10, max_wait_ms=1.0) as srv:
+        srv.search(vecs[0])  # warm: plans the one-task scan
+        monkeypatch.setattr(
+            DataFrame, "mapInArrow", lambda *a, **kw: calls.append(1) or map_in_arrow(*a, **kw)
+        )
+        assert [srv.search(v) for v in vecs] == want
+    assert calls == []
+
+
+def test_concurrent_executes_keep_their_queries(spark, qtable):
+    """Six threads run ``_execute`` at once on one planned scan, each
+    with its own query: every thread gets its own answer, and its
+    job-local query property is cleared after a normal return and after
+    a failed job."""
+    from pyspark.errors import PythonException
+
+    from pythonvectordb_spark.operators.search import QUERIES_PROPERTY
+    from pythonvectordb_spark.serving import KnnServer, quantize_query
+
+    sc = spark.sparkContext
+    vecs = _query_vecs(spark, 6)
+    want = [_knn_join_single(spark, qtable, v) for v in vecs]
+    got, after_ok, after_fail = [None] * 6, [0] * 6, [0] * 6
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with KnnServer(qtable, k=10) as srv:
+            srv._execute([quantize_query(vecs[0])])  # plan before the race
+            barrier = threading.Barrier(6)
+
+            def worker(i):
+                barrier.wait()
+                got[i] = srv._execute([quantize_query(vecs[i])])[0]
+                after_ok[i] = sc.getLocalProperty(QUERIES_PROPERTY)
+                with pytest.raises(PythonException):  # 3-dim query, 64-dim table
+                    srv._execute([[1, 2, 3]])
+                after_fail[i] = sc.getLocalProperty(QUERIES_PROPERTY)
+
+            threads = [threading.Thread(target=worker, args=(i,)) for i in range(6)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(120)
+                assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(switch)
+    assert got == want
+    assert after_ok == [None] * 6 and after_fail == [None] * 6
+
+
+def test_server_scan_without_queries_raises(qtable):
+    """The server's planned scan collected with no query property fails
+    with the kernel's ``ValueError`` naming the property."""
+    from pyspark.errors import PythonException
+
+    from pythonvectordb_spark.operators.search import QUERIES_PROPERTY
+    from pythonvectordb_spark.serving import KnnServer
+
+    with KnnServer(qtable, k=3) as srv:
+        with pytest.raises(PythonException, match=f"ValueError: int8_cosine_scan: .*{QUERIES_PROPERTY}"):
+            srv._scoring(1).collect()
+
+
+def test_server_forms_batch_when_a_slot_frees(qtable):
+    """With the one job slot held, queries arriving far apart (each
+    beyond the accumulation window) wait together and run as one batch
+    once the slot frees."""
+    import time
+
+    from pythonvectordb_spark.serving import KnnServer
+
+    release, entered, batches = threading.Event(), threading.Event(), []
+
+    def execute(qvs):
+        batches.append(len(qvs))
+        entered.set()
+        release.wait()
+        return {i: [(i, 1.0)] for i in range(len(qvs))}
+
+    with KnnServer(qtable, k=3, max_wait_ms=1.0, max_inflight=1) as srv:
+        srv._execute = execute
+        threads = [threading.Thread(target=srv.search, args=([1.0] * 64,)) for _ in range(4)]
+        threads[0].start()
+        assert entered.wait(10)
+        for t in threads[1:]:
+            time.sleep(0.05)
+            t.start()
+        deadline = time.monotonic() + 10
+        while len(srv._pending) < 3 and time.monotonic() < deadline:
+            time.sleep(0.01)
+        release.set()
+        for t in threads:
+            t.join(10)
+            assert not t.is_alive()
+    assert batches == [1, 3]
+
+
+def test_server_stats(spark, qtable):
+    """``stats()`` reports driver-side percentiles over the last
+    MAX_LATENCIES answered requests and runs no Spark job."""
+    import time
+
+    from pythonvectordb_spark.operators.stats import MAX_LATENCIES
+    from pythonvectordb_spark.serving import KnnServer
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def execute(qvs):
+        time.sleep(0.02)
+        return {i: [] for i in range(len(qvs))}
+
+    with KnnServer(qtable, k=3, max_wait_ms=1.0) as srv:
+        srv._execute = execute
+        empty = srv.stats()
+        assert empty["requests"] == 0 and empty["e2e_ms_p99"] == 0.0
+        for _ in range(5):
+            assert srv.search([1.0] * 64) == []
+        jobs = len(tracker.getJobIdsForGroup())
+        st = srv.stats()
+        assert len(tracker.getJobIdsForGroup()) == jobs
+        assert st["requests"] == 5 and st["mean_batch"] == 1.0
+        assert 20.0 <= st["job_ms_p50"] <= st["job_ms_p95"] <= st["job_ms_p99"]
+        assert st["e2e_ms_p50"] >= st["job_ms_p50"] + st["queue_wait_ms_p50"] > 20.0
+        # eight clients at once: no answered request is lost from the
+        # ring, and the ring keeps only the last MAX_LATENCIES
+        srv._execute = lambda qvs: {i: [] for i in range(len(qvs))}
+        clients = [
+            threading.Thread(target=lambda: [srv.search([1.0] * 64) for _ in range(10)])
+            for _ in range(8)
+        ]
+        for t in clients:
+            t.start()
+        for t in clients:
+            t.join(30)
+            assert not t.is_alive()
+        assert srv.stats()["requests"] == 85
+        for _ in range(MAX_LATENCIES):
+            srv.search([1.0] * 64)
+        assert srv.stats()["requests"] == MAX_LATENCIES
+
+
+def test_wrong_dimension_query_fails_alone(spark, qtable):
+    """A query of the wrong length raises ``ValueError`` in its own
+    caller; the queries that arrive with it still get their answers."""
+    from pythonvectordb_spark.serving import KnnServer
+
+    vecs = _query_vecs(spark, 3)
+    want = [_knn_join_single(spark, qtable, v) for v in vecs]
+    got, errors = [None] * 4, [None] * 4
+    with KnnServer(qtable, k=10, max_wait_ms=50.0) as srv:
+        barrier = threading.Barrier(4)
+
+        def worker(i):
+            barrier.wait()
+            try:
+                got[i] = srv.search(vecs[i] if i < 3 else [1.0] * 63)
+            except ValueError as e:
+                errors[i] = e
+
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+            assert not t.is_alive()
+    assert got[:3] == want and errors[:3] == [None] * 3
+    assert "length 63" in str(errors[3])
+
+
+def test_server_rejects_mixed_dimension_table(spark):
+    from pythonvectordb_spark.serving import KnnServer
+
+    table = spark.createDataFrame([(1, [1, 2]), (2, [1, 2, 3])], "vec_id long, qvec array<tinyint>")
+    with pytest.raises(ValueError, match="lengths 2 to 3"):
+        KnnServer(table, k=1)
