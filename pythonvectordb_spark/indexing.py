@@ -1676,13 +1676,16 @@ def quantile_buckets_audit(
 
     Scale shape: fit is ONE pass building mergeable partition-local GK
     sketches (state O(1/relative_error) per task — the 100 TB path);
-    the rank and bucket censuses are one conditional-sum agg and one
-    map-side-combined group-by over the transform. num_buckets + 3
-    scalars reach the driver.
+    the rank and bucket censuses share one conditional-sum agg with no
+    transform: Bucketizer puts v in bucket b when s_b <= v < s_{b+1}, so
+    a bucket's count is a difference of count(value < split) terms.
+    2 * num_buckets scalars reach the driver. A NULL or NaN value
+    raises ``ValueError`` (the fit would skip it and Bucketizer reject it).
     """
     from pyspark.ml.feature import QuantileDiscretizer
 
     src = events.select("value")
+    v = F.col("value")
     model = QuantileDiscretizer(
         numBuckets=num_buckets,
         inputCol="value",
@@ -1691,34 +1694,31 @@ def quantile_buckets_audit(
     ).fit(src)
     splits = model.getSplits()  # [-inf, s1, ..., s_{k-1}, +inf]
     interior = splits[1:-1]
-    rank_row = src.agg(
+
+    def count_if(cond, name):
+        return F.sum(cond.cast("long")).cast("long").alias(name)
+
+    census = src.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        *[
-            F.sum((F.col("value") <= F.lit(float(s))).cast("long"))
-            .cast("long")
-            .alias(f"r{i}")
-            for i, s in enumerate(interior)
-        ],
+        count_if(v.isNull() | F.isnan(v), "bad"),
+        *[count_if(v <= F.lit(float(s)), f"r{i}") for i, s in enumerate(interior)],
+        *[count_if(v < F.lit(float(s)), f"lt{i}") for i, s in enumerate(interior)],
     ).first()
-    n = int(rank_row["n"])
+    if census["bad"]:
+        raise ValueError(f"quantile_buckets_audit: {census['bad']} NULL or NaN values")
+    n = int(census["n"])
     bound = relative_error * n + 1.0
-    counts = {
-        int(r["_bucket"]): int(r["cnt"])
-        for r in model.transform(src)
-        .groupBy("_bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
+    below = [0] + [int(census[f"lt{i}"]) for i in range(len(interior))] + [n]
     rows = []
     for b in range(num_buckets):
         p_lo = b / num_buckets
         p_hi = (b + 1) / num_buckets
         if b < num_buckets - 1:
-            rank = int(rank_row[f"r{b}"])
+            rank = int(census[f"r{b}"])
             rank_ok = abs(rank - p_hi * n) <= bound
         else:
             rank_ok = True  # upper edge is +inf: rank == n by definition
-        share_ok = abs(counts.get(b, 0) / n - 1.0 / num_buckets) <= share_tol
+        share_ok = abs((below[b + 1] - below[b]) / n - 1.0 / num_buckets) <= share_tol
         rows.append(
             (b, float(p_lo), float(p_hi), n, int(rank_ok), int(share_ok))
         )

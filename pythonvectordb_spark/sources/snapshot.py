@@ -4,9 +4,11 @@
 The reference compacts and writes one compressed ``.npz`` with vectors,
 ids, and metadata (:572-582); ``load`` validates version/dim/shape
 (:616-630). Here a snapshot is an immutable Parquet directory: schema
-travels in the footer, dimension/version travel in a ``_pvdb_meta.json``
-sidecar, and "compaction" is simply the rewrite itself (no tombstones —
-deletes are anti-joins, SURVEY.md §2.7).
+travels in the footer and, with dimension/version, in a
+``_pvdb_meta.json`` sidecar, and "compaction" is simply the rewrite
+itself (no tombstones — deletes are anti-joins, SURVEY.md §2.7). Like
+the reference's header check, ``load_snapshot`` reads the sidecar and
+runs no Spark job: the sidecar's schema spares the footer-inference job.
 
 Scale: parquet + snappy, ``repartition`` before write keeps file counts
 sane; at 100 TB the same code writes a partitioned table.
@@ -19,8 +21,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pythonvectordb_spark.functions.vector import l2_normalize, quantize
+from pythonvectordb_spark.sources.testdata import _read_parquet
 
 SNAPSHOT_VERSION = "1.0.0"  # mirrors reference __version__ (pythonvectordb.py:17)
 META_FILE = "_pvdb_meta.json"
@@ -67,7 +71,7 @@ def save_snapshot(df: DataFrame, path: str, dim: int, num_files: int | None = No
     """Write an immutable snapshot (reference ``save``, pythonvectordb.py:557-582)."""
     out = df.repartition(num_files) if num_files else df
     out.write.mode("overwrite").parquet(path)
-    meta = {"version": SNAPSHOT_VERSION, "dimension": dim}
+    meta = {"version": SNAPSHOT_VERSION, "dimension": dim, "schema": df.schema.jsonValue()}
     with open(os.path.join(path, META_FILE), "w") as f:
         json.dump(meta, f)
 
@@ -76,9 +80,12 @@ def load_snapshot(spark: SparkSession, path: str, expected_dim: int | None = Non
     """Read + validate a snapshot (reference ``load``, pythonvectordb.py:584-646).
 
     Validation mirrors the reference's version/dimension checks (:616-630)
-    but as metadata + a cheap schema assertion, not a full scan.
+    as metadata, not a scan. The read takes its schema from the sidecar
+    and runs no job; a snapshot whose sidecar predates the ``"schema"``
+    key reads through ``_read_parquet``'s per-path memo instead.
     """
     meta_path = os.path.join(path, META_FILE)
+    meta = {}
     if os.path.exists(meta_path):
         with open(meta_path) as f:
             meta = json.load(f)
@@ -86,5 +93,5 @@ def load_snapshot(spark: SparkSession, path: str, expected_dim: int | None = Non
             raise ValueError(f"snapshot version {meta.get('version')} != {SNAPSHOT_VERSION}")
         if expected_dim is not None and meta.get("dimension") != expected_dim:
             raise ValueError(f"snapshot dimension {meta.get('dimension')} != {expected_dim}")
-    df = spark.read.parquet(path)
-    return df
+    schema = meta.get("schema")
+    return _read_parquet(spark, path, schema=schema and StructType.fromJson(schema))

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pythonvectordb_spark.sources.testdata import _read_parquet
+
 __all__ = ["build_zone_map", "zone_files_for_range", "pruned_read"]
 
 
@@ -83,10 +85,10 @@ def pruned_read(
                 "empty table; cannot derive a result schema"
             )
         return (
-            spark.read.parquet(first[0].file)
+            _read_parquet(spark, first[0].file)
             .filter(F.lit(False))
             .filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
         )
-    return spark.read.parquet(*files).filter(
+    return _read_parquet(spark, *files).filter(
         (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
     )

@@ -722,6 +722,17 @@ def test_quantile_buckets_rank_contract_not_tautological(spark):
     assert any(r.share_ok == 0 for r in tight)
 
 
+@pytest.mark.parametrize("bad", [None, float("nan")], ids=["null", "nan"])
+def test_quantile_buckets_rejects_null_and_nan(spark, bad):
+    """A NULL or NaN value is counted in the census agg and refused with
+    ``ValueError`` (the fit skips it, so it would otherwise pass unseen)."""
+    from pythonvectordb_spark.indexing import quantile_buckets_audit
+
+    df = spark.createDataFrame([(float(i),) for i in range(100)] + [(bad,)], "value double")
+    with pytest.raises(ValueError, match="NULL or NaN"):
+        quantile_buckets_audit(df)
+
+
 def test_bisecting_kmeans_invariants_not_tautological(spark):
     """Structural invariants hold at k=4 — and the balance flag must
     FAIL under an impossible max-share bound (k=4 forces some cluster
