@@ -11,9 +11,10 @@ This replaces the round-1..3 "decode is a stand-in" marker for images:
 `operators/media.py` builds REAL PNG payloads (deterministic pixels)
 and `media_image_stats` decodes them end-to-end, oracle-checked — the
 DuckDB twin recomputes the same pixel bytes from their definition, so
-a codec regression breaks the value hash. JPEG/video/audio codecs
-remain genuinely out of scope in-container (see
-``media.decode_media_stub_real``).
+a codec regression breaks the value hash. Baseline JPEG and PCM WAV
+decode for real too (``functions/jpeg.py``, ``functions/wav.py``);
+video and compressed audio need codec libraries the runtime lacks and
+are de-scoped (SURVEY.md §2.12).
 """
 
 from __future__ import annotations

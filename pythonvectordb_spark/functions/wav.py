@@ -7,8 +7,8 @@ fixtures and synthetic probes actually use. Encoding writes the
 canonical 44-byte-header layout; decoding walks the RIFF chunk list
 (word-aligned, unknown chunks skipped) so externally-produced PCM WAVs
 with extra chunks (LIST/INFO, fact) decode too. Compressed audio
-(MP3/AAC/opus) stays genuinely out of scope in-container (see
-``media.decode_media_stub_real``).
+(MP3/AAC/opus) needs codec libraries the runtime lacks and is
+de-scoped, like video (SURVEY.md §2.12).
 
 This extends the PNG precedent (``functions/png.py``) to the audio
 half of the round-1..3 "decode is a stand-in" marker:

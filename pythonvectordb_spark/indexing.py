@@ -237,45 +237,6 @@ def minhash_lsh_text_pairs(
     )
 
 
-def train_word2vec_neighbors(
-    docs: DataFrame,
-    probe_word: str = "the",
-    top_n: int = 5,
-    vector_size: int = 16,
-    seed: int = 42,
-    text_col: str = "text",
-    num_partitions: int = 8,
-) -> DataFrame:
-    """Batch embedding TRAINING on MLlib (the other half of
-    "batch embedding and index building fit Spark MLlib"): learn word
-    vectors from the corpus, return the probe word's nearest neighbors.
-
-    Engine-specific math (negative sampling init) -> rows-only driver
-    check; tests assert neighbor stability under a tolerance rather than
-    bit-exactness (the distributed fit merges partition updates in a
-    nondeterministic order). At scale this is the standard distributed
-    embedding pretrain: one tokenization pass + iterative fit over
-    partitions — ``num_partitions`` defaults to the parallel fit; pin it
-    to 1 only when bit-reproducibility matters more than throughput.
-    """
-    from pyspark.ml.feature import Word2Vec
-
-    tok = RegexTokenizer(
-        inputCol=text_col, outputCol="words", pattern=r"[^a-z]+", toLowercase=True
-    )
-    words = tok.transform(docs).select("words")
-    model = Word2Vec(
-        vectorSize=vector_size,
-        minCount=5,
-        seed=seed,
-        inputCol="words",
-        outputCol="vec",
-        numPartitions=num_partitions,
-    ).fit(words)
-    syn = model.findSynonyms(probe_word, top_n)
-    return syn.select("word", F.round("similarity", 6).alias("similarity"))
-
-
 def word2vec_guarantee(
     docs: DataFrame,
     probe_word: str = "the",

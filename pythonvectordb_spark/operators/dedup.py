@@ -312,9 +312,9 @@ def minhash_side(
 ) -> tuple[DataFrame, DataFrame]:
     """The (shingle-sets, band-table) pair of one side of a MinHash
     dedup, as a first-class artifact: compute it ONCE per corpus
-    snapshot, materialize it (parquet bucketed on (band, bkey) via
-    ``sources/bucketing``, or ``localCheckpoint`` in-session), and hand
-    it to ``incremental_minhash_dedup(corpus_side=...)`` for every
+    snapshot, materialize it (parquet bucketed on (band, bkey) with
+    ``DataFrameWriter.bucketBy``, or ``localCheckpoint`` in-session),
+    and hand it to ``incremental_minhash_dedup(corpus_side=...)`` for every
     subsequent ingest batch. Growing the corpus = unioning the admitted
     batch's (small) side frames onto the stored ones — the corpus is
     never re-shingled. This is the side-table design the 100 TB gate
@@ -343,7 +343,7 @@ def incremental_minhash_dedup(
     only candidates are verified with the exact shingle Jaccard. Cost per
     batch is O(batch shingling + bucket collisions). At scale the corpus
     side's band table is computed once per snapshot and materialized
-    bucketed on (band, bkey) (``sources/bucketing``), making the
+    bucketed on (band, bkey) (``DataFrameWriter.bucketBy``), making the
     candidate join Exchange-free on the corpus side; each ingest batch
     then only shuffles its own (tiny) band table.
 

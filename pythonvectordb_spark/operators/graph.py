@@ -106,6 +106,8 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n_nodes = nodes.count()
+    if not n_nodes:  # no edges: a typed empty result
+        return nodes.select("node", F.lit(0.0).alias("rank"))
     n_edges = e.count()
     base = (1.0 - damping) / n_nodes
 
@@ -517,6 +519,8 @@ def hits(
         .localCheckpoint(eager=True)
     )
     n_nodes = nodes.count()
+    if not n_nodes:  # no edges: a typed empty result
+        return nodes.select("node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth"))
     if n_nodes > _SMALL_NODES:
         raise ValueError(
             f"hits: {n_nodes} nodes exceed _SMALL_NODES={_SMALL_NODES}"
@@ -603,6 +607,13 @@ def markov_stationary(
         .localCheckpoint(eager=True)
     )
     n_states = states.count()
+    if not n_states:  # no transitions: a typed empty result
+        return states.select(
+            F.col("s").alias("event_type"),
+            F.lit(0).cast("long").alias("n_events"),
+            F.lit(0.0).alias("empirical_share"),
+            F.lit(0.0).alias("stationary_p"),
+        )
     if n_states > _SMALL_NODES:
         raise ValueError(
             f"markov_stationary: {n_states} states exceed _SMALL_NODES={_SMALL_NODES}"

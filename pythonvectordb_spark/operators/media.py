@@ -265,7 +265,7 @@ def media_image_stats(
     recomputes the same stats straight from the pixel DEFINITION — so a
     codec bug (filter math, scanline layout, chunk parsing) breaks the
     value hash. This retires the "decode is a stand-in" marker for
-    images; JPEG/video/audio stay behind `decode_media_stub_real`."""
+    images (video and compressed audio are de-scoped, SURVEY §2.12)."""
     import numpy as np
 
     from pythonvectordb_spark.functions.png import png_decode
@@ -430,8 +430,7 @@ def media_audio_stats(
     DEFINITION — a codec bug (chunk walk, header offsets, endianness)
     breaks the value hash. Together with `media_image_stats` this
     retires the audio half of the decode stand-in for uncompressed
-    formats; compressed audio/JPEG/video stay behind
-    `decode_media_stub_real`."""
+    formats (compressed audio and video are de-scoped, SURVEY §2.12)."""
     import numpy as np
 
     from pythonvectordb_spark.functions.wav import wav_decode
@@ -532,24 +531,6 @@ def media_audio_resample(
     return src.mapInPandas(_resample, MEDIA_AUDIO_RESAMPLE_SCHEMA)
 
 
-def decode_media_stub_real() -> None:
-    """Marker for the genuinely-unimplementable step in this container:
-    video / COMPRESSED-audio decoding requires codec libraries not
-    installed here. PNG images (functions/png.py), baseline JPEG
-    (functions/jpeg.py — real DCT/Huffman/marker machinery), and PCM
-    WAV audio (functions/wav.py) are all REALLY decoded and
-    oracle-checked; this marker covers video and compressed audio
-    only (formally de-scoped in SURVEY §2.12 — the container ships no
-    ffmpeg and a from-scratch H.264/MP3 decoder is out of proportion
-    to the surface it would cover)."""
-    raise NotImplementedError(
-        "video/compressed-audio decoding requires ffmpeg; PNG, baseline "
-        "JPEG and PCM WAV decode for real via functions/{png,jpeg,wav}.py, "
-        "other formats use the deterministic stand-in wired through the "
-        "same mapInPandas path"
-    )
-
-
 # ---------------------------------------------------------------- JPEG
 
 JPEG_SIDE = 16  # 2x2 grid of 8x8 DCT blocks
@@ -605,9 +586,8 @@ def media_jpeg_stats(
     the DuckDB oracle recomputes the decoded pixels straight from the
     block-constant DEFINITION in integer arithmetic, so a codec bug
     anywhere in the marker/Huffman/zigzag/DPCM/IDCT pipeline breaks the
-    value hash. This retires the 'JPEG is a stand-in' marker; the
-    remaining `decode_media_stub_real` covers video/compressed audio
-    only."""
+    value hash. This retires the 'JPEG is a stand-in' marker; only
+    video and compressed audio stay de-scoped (SURVEY §2.12)."""
     import numpy as np
 
     from pythonvectordb_spark.functions.jpeg import jpeg_decode

@@ -66,16 +66,3 @@ def upsert_vectors(
     removed = table.join(batch.select(id_col), id_col, "left_anti")
     prepared = batch.withColumn("qvec", quantize(l2_normalize(vec_col)))
     return removed.unionByName(prepared.select(*table.columns))
-
-
-def synthesize_ids(batch: DataFrame, start: int = 0, id_col: str = "vec_id") -> DataFrame:
-    """Auto-generate ids for an id-less batch.
-
-    Reference synthesizes ``f"vec_{start+i}"`` (pythonvectordb.py:287-289).
-    Positional counters don't distribute; we use a deterministic
-    monotonically-increasing id offset by ``start``. At scale this is
-    zipWithIndex-free (no extra job).
-    """
-    return batch.withColumn(
-        id_col, (F.monotonically_increasing_id() + F.lit(start)).cast("long")
-    )

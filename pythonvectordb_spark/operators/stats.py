@@ -1,48 +1,19 @@
-"""Observability: the reference's ``get_stats`` (pythonvectordb.py:512-555)
-as a one-row DataFrame aggregation (SURVEY.md §2.9).
+"""Statistics over vector tables and relational columns.
 
-Capacity/utilization drop out (no pre-allocation in Spark); the memory
-estimate mirrors the reference's ``vector_count * dimension`` bytes
-(pythonvectordb.py:520) for the int8 payload. Latency percentiles come
-from a latency log table when one is supplied (the reference keeps a
-100-entry ring buffer, :234).
+``vector_stats`` is the table half of the reference's ``get_stats``
+(pythonvectordb.py:512-555) as a one-row DataFrame aggregation
+(SURVEY.md §2.9): capacity/utilization drop out (no pre-allocation in
+Spark), and the memory estimate mirrors the reference's
+``vector_count * dimension`` bytes (:520) for the int8 payload. The
+latency half, the reference's 100-entry ring (:234), is
+``serving.KnnServer.stats()``. The rest of the module holds the
+distribution tests and estimators the registry's stats queries run.
 """
 
 from __future__ import annotations
 
-import time
-from collections import deque
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MAX_LATENCIES = 100  # the reference's ring-buffer size (pythonvectordb.py:21)
-
-
-class LatencyLog:
-    """Driver-side search-latency ring buffer (reference search timing,
-    pythonvectordb.py:234,399-400): the last MAX_LATENCIES wall times.
-
-    Spark jobs are driver-coordinated, so per-query wall time is a
-    driver-side measurement; stats over the log run as a (tiny) DataFrame
-    aggregation so the percentile machinery is the engine's own.
-    """
-
-    def __init__(self, maxlen: int = MAX_LATENCIES) -> None:
-        self._buf: deque[float] = deque(maxlen=maxlen)
-
-    def time(self, df: DataFrame) -> list:
-        """Execute (collect) a query DataFrame, recording wall time."""
-        t0 = time.time()
-        rows = df.collect()
-        self._buf.append((time.time() - t0) * 1000.0)
-        return rows
-
-    def stats(self, spark: SparkSession) -> DataFrame:
-        """Latency percentiles as a one-row DataFrame (get_stats
-        analogue, pythonvectordb.py:543-553)."""
-        data = [(float(x),) for x in self._buf] or [(0.0,)]
-        return latency_stats(spark.createDataFrame(data, "ms double"))
 
 
 def vector_stats(table: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -86,19 +57,6 @@ def label_centroids(table: DataFrame, id_col: str = "vec_id", qvec_col: str = "q
 
     return table.select("label", qv).groupBy("label").applyInPandas(
         centroid, schema="label int, n_vectors long, centroid_checksum long"
-    )
-
-
-def latency_stats(latency_df: DataFrame, ms_col: str = "ms") -> DataFrame:
-    """avg/p50/p95/p99/qps over a latency log (reference get_stats
-    percentiles, pythonvectordb.py:543-553)."""
-    c = F.col(ms_col)
-    return latency_df.agg(
-        F.round(F.mean(c), 3).alias("avg_ms"),
-        F.round(F.expr(f"percentile_approx({ms_col}, 0.5)"), 3).alias("p50_ms"),
-        F.round(F.expr(f"percentile_approx({ms_col}, 0.95)"), 3).alias("p95_ms"),
-        F.round(F.expr(f"percentile_approx({ms_col}, 0.99)"), 3).alias("p99_ms"),
-        F.round(F.lit(1000.0) / F.mean(c), 1).alias("qps_est"),
     )
 
 

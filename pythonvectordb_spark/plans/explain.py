@@ -2,12 +2,10 @@
 results (SURVEY.md §4 — everything the reference hand-codes is a built-in
 Catalyst behavior, and these helpers prove it fires).
 
-Used by tests/test_plans.py to pin:
+Used by the plan advisor and tests/test_plans.py to pin:
   * predicate pushdown into parquet scans (PushedFilters),
   * column pruning (ReadSchema carries only referenced columns),
-  * broadcast joins for dimension tables,
-  * TakeOrderedAndProject for top-k (no global sort),
-  * partial (map-side) aggregation before the shuffle.
+  * broadcast joins for dimension tables.
 """
 
 from __future__ import annotations
@@ -52,14 +50,3 @@ def pruned_columns(df: DataFrame, table_cols: list[str]) -> set[str]:
 
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df) or "BroadcastNestedLoopJoin" in explain_str(df)
-
-
-def has_take_ordered(df: DataFrame) -> bool:
-    return "TakeOrderedAndProject" in explain_str(df)
-
-
-def has_partial_aggregate(df: DataFrame) -> bool:
-    """Map-side combine proof: a HashAggregate with partial mode below the
-    exchange."""
-    txt = explain_str(df)
-    return "partial_" in txt or re.search(r"HashAggregate.*\n.*Exchange", txt) is not None

@@ -91,6 +91,9 @@ SERVE_ROWS_PER_TASK = 12_500
 # 10k rows get 2 tasks at 128-256 queries, 3 at 512 and 4 at 1,024, none
 # slower than the table's own 4 partitions.
 SERVE_QUERIES_PER_ROW = 256
+# requests KnnServer.stats() covers: the reference's latency ring size
+# (pythonvectordb.py:21)
+MAX_LATENCIES = 100
 
 
 class _Request:
@@ -129,8 +132,6 @@ class KnnServer:
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark.sql import functions as F
-
-        from pythonvectordb_spark.operators.stats import MAX_LATENCIES
 
         # every request scans the whole table: project it, and learn its
         # rows and vector dimension in one job; each request then sizes
@@ -203,13 +204,13 @@ class KnnServer:
         return result
 
     def stats(self) -> dict[str, float]:
-        """Driver-side latency of the last ``operators.stats.
-        MAX_LATENCIES`` answered requests (no Spark job): ``requests``,
-        p50/p95/p99 of end-to-end (``e2e_ms_*``: ``search`` call to
-        answer), queue wait (``queue_wait_ms_*``: enqueued to its job's
-        start) and job time (``job_ms_*``: the batch's scoring job), and
-        ``mean_batch``, the mean size of the batches they rode in. All
-        0.0 before the first answer."""
+        """Driver-side latency of the last ``MAX_LATENCIES`` answered
+        requests (no Spark job): ``requests``, p50/p95/p99 of end-to-end
+        (``e2e_ms_*``: ``search`` call to answer), queue wait
+        (``queue_wait_ms_*``: enqueued to its job's start) and job time
+        (``job_ms_*``: the batch's scoring job), and ``mean_batch``, the
+        mean size of the batches they rode in. All 0.0 before the first
+        answer."""
         import numpy as np
 
         with self._ring_lock:

@@ -44,9 +44,6 @@ def get_spark(app_name: str = "pythonvectordb-spark", master: str | None = None)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.daemon.module", "pythonvectordb_spark.daemon")
-        # let Python DataSources (sources/jsonl.py) absorb comparison
-        # filters at the source instead of post-scan (4.1+ opt-in)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # guide §9: let the planner pick shuffled-hash join when its size
         # conditions are met. Round-10 A/B over a 20-query subset:

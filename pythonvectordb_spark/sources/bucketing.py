@@ -1,45 +1,21 @@
-"""Physical-layout tools for 100 TB joins: bucketing (shuffle-free
-co-located joins) and key salting (skew mitigation when AQE's runtime
+"""Key salting for skewed joins (skew mitigation when AQE's runtime
 splitting isn't enough).
 
-Bucketing: writing both join sides bucketed by the join key into the
-warehouse lets Catalyst plan a sort-merge join with NO Exchange on either
-side — at petabyte scale this converts every recurring fact-fact join
-from a full shuffle into local merges. tests/test_bucketing.py asserts
-the Exchange-free plan.
+Salting explodes the hot side's key space by a salt factor and
+replicates the other side per salt value; the shuffle then spreads a hot
+key over ``salt`` reducers. Used when one key dominates (power-law user
+ids, null keys): AQE's skew join splits oversized partitions, but
+salting also fixes single-key hotspots inside one partition.
 
-Salting: explode the hot side's key space by a salt factor and replicate
-the other side per salt value; the shuffle then spreads a hot key over
-``salt`` reducers. Used when one key dominates (power-law user ids, null
-keys) — AQE skew-join splits oversized partitions, but salting also fixes
-single-key hotspots inside one partition.
+Co-locating recurring joins needs no helper here: Spark's own
+``DataFrameWriter.bucketBy(...).sortBy(...).saveAsTable(...)`` on both
+sides lets Catalyst plan the join with no Exchange.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame, table_name: str, bucket_col: str, num_buckets: int = 8
-) -> None:
-    """Persist as a bucketed+sorted managed table (idempotent overwrite,
-    including orphaned warehouse locations from dropped metastores)."""
-    import shutil
-
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = f"{warehouse.removeprefix('file:')}/{table_name.lower()}"
-    shutil.rmtree(loc, ignore_errors=True)
-    (
-        df.write.mode("overwrite")
-        .bucketBy(num_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
 
 
 def salted_join(

@@ -1,111 +1,22 @@
-"""Streaming corpus curation: the ingest-time half of the curation
-pipeline (operators/curation.py) — scrub and screen documents AS they
-arrive instead of in a nightly batch.
+"""Streaming corpus curation: the ingest-time near-duplicate gate.
 
-Both operators are stateless per-row transforms, so they lift onto an
-unbounded stream in append mode with no watermark and no state store:
-``pii_scrub`` is a pure expression chain; decontamination scores each
-document against a STATIC benchmark shingle vocabulary carried as one
-broadcast array (the stream-static pattern — the benchmark set is fixed
-per deployment, and a per-doc set intersection needs no cross-batch
-state). The batch twins are the correctness oracle, pinned by
-tests/test_stream_curation.py.
+``start_dedup_gate`` dedups every arriving micro-batch against the
+accumulated corpus before appending it. Its per-batch body is the pure
+``gate_batch``, which the registry's ``dedup_gate_twin`` folds over a
+fixed batch sequence so the DuckDB oracle witnesses the streaming
+semantics; tests/test_stream_curation.py pins the streaming run.
+
+The stateless batch curation operators (``operators/curation.py``,
+``operators/textops.chunk_documents``) run on a streaming DataFrame
+unchanged and need no wrapper here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
-from pythonvectordb_spark.functions.text import shingles
-from pythonvectordb_spark.operators.curation import pii_scrub
-from pythonvectordb_spark.operators.dedup import _shingled
-
-
-def scrub_stream(stream: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """PII-redact a document stream (stateless transform; works on both
-    bounded and unbounded DataFrames)."""
-    return pii_scrub(stream, text_col=text_col, id_col=id_col)
-
-
-def quality_gate_stream(
-    stream: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **thresholds,
-) -> DataFrame:
-    """Ingest-time quality gate: documents failing the composite
-    :func:`~pythonvectordb_spark.operators.curation.quality_filter`
-    verdict are dropped the moment they arrive; survivors pass through
-    with their original columns plus the verdict (so downstream sinks
-    can partition on signals). Stateless single-pass expressions —
-    append mode, no watermark, no state store."""
-    from pythonvectordb_spark.operators.curation import quality_filter
-
-    gated = quality_filter(
-        stream, text_col=text_col, id_col=id_col, keep_columns=True, **thresholds
-    )
-    return gated.filter(F.col("keep")).drop("keep", "reject_reason")
-
-
-def chunk_stream(
-    stream: DataFrame,
-    chunk_tokens: int = 64,
-    overlap: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Chunk documents as they arrive (RAG-index ingestion): the batch
-    chunker is one stateless explode, so it lifts onto an unbounded
-    stream unchanged — each document's chunks are emitted exactly once,
-    in the micro-batch that carried the document."""
-    from pythonvectordb_spark.operators.textops import chunk_documents
-
-    return chunk_documents(
-        stream,
-        chunk_tokens=chunk_tokens,
-        overlap=overlap,
-        text_col=text_col,
-        id_col=id_col,
-    )
-
-
-def decontaminate_stream(
-    stream: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-    min_common: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Flag streaming documents overlapping a STATIC benchmark set.
-
-    The benchmark's distinct shingle vocabulary is folded into a single
-    array row and broadcast; each arriving document is scored with
-    ``size(array_intersect(doc_shingles, vocabulary))`` — a stateless
-    per-row decision, made the moment the document arrives. Shingle
-    lists are distinct on both sides, so the intersection size equals
-    the batch operator's per-doc shared-shingle count exactly.
-
-    At scale the vocabulary of a real eval set is a few hundred thousand
-    shingles — comfortably broadcastable; a vocabulary too large to
-    broadcast is the batch operator's inverted-index job instead.
-    """
-    vocab_row = (
-        _shingled(benchmark, text_col, id_col, n)
-        .select(F.explode("sh").alias("shingle"))
-        .agg(F.collect_set("shingle").alias("_vocab"))
-    )
-    scored = (
-        stream.select(F.col(id_col), shingles(text_col, n).alias("_sh"))
-        .crossJoin(F.broadcast(vocab_row))
-        .select(
-            F.col(id_col),
-            F.size(F.array_intersect("_sh", "_vocab")).cast("long").alias("n_shared"),
-        )
-    )
-    return scored.filter(F.col("n_shared") >= F.lit(min_common))
+from pythonvectordb_spark.streaming.ingest import read_existing
 
 
 def gate_batch(
@@ -183,89 +94,13 @@ def start_dedup_gate(
     per batch, which is correct and keeps the example self-contained.
     """
     def gate(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        try:
-            corpus = spark.read.parquet(target_dir)
-        except AnalysisException as e:
-            # Only the missing-target case means "first batch". Any other
-            # read failure (corrupt footer, permissions, transient FS
-            # error) must fail the batch so the checkpoint retries it —
-            # silently skipping the gate would append un-deduped rows
-            # permanently. getCondition() is the structured error class
-            # (pyspark 4 name; getErrorClass() pre-4.1) — match on it,
-            # not the version-dependent message text.
-            getter = getattr(e, "getCondition", None) or getattr(
-                e, "getErrorClass", None
-            )
-            cond = (getter() if getter else None) or str(e)
-            if "PATH_NOT_FOUND" not in cond:
-                raise
-            corpus = None  # first batch: nothing to gate against
+        corpus = read_existing(batch.sparkSession, target_dir)
         gate_batch(
             corpus, batch, threshold=threshold, text_col=text_col, id_col=id_col
         ).write.mode("append").parquet(target_dir)
 
     return (
         stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_drift_monitor(
-    stream: DataFrame,
-    reference: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str,
-    dims: tuple[str, ...] = ("lang", "source"),
-    id_col: str = "doc_id",
-):
-    """Ingest-time distribution-drift monitor: every arriving
-    micro-batch is PSI-scored against a STATIC reference snapshot
-    (`operators/curation.distribution_drift` — the oracled batch
-    operator IS the per-batch body), and the per-(dim, value) drift
-    terms land in ``target_dir`` tagged with the batch id. The
-    streaming lift of the "run the drift report before admitting a new
-    crawl dump" step: the report exists the moment the batch does, so
-    an alerting threshold on sum(psi_term) can gate admission instead
-    of auditing after the fact.
-
-    The reference frame is fixed per deployment (the stream-static
-    pattern, like `decontaminate_stream`'s benchmark vocabulary); each
-    batch job re-aggregates only the reference's |categories|-sized
-    distribution plus the batch's own counts. Exactly-once: the sink is
-    append-only parquet keyed by batch_id, and a re-delivered batch
-    (commit-window crash) finds its batch_id already present and writes
-    nothing — the same replay-guard discipline as `start_dedup_gate`.
-    """
-    from pythonvectordb_spark.operators.curation import distribution_drift
-
-    def monitor(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        try:
-            done = (
-                spark.read.parquet(target_dir)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if done:
-                return  # replayed batch: report already committed
-        except AnalysisException as e:
-            getter = getattr(e, "getCondition", None) or getattr(
-                e, "getErrorClass", None
-            )
-            cond = (getter() if getter else None) or str(e)
-            if "PATH_NOT_FOUND" not in cond:
-                raise
-        report = distribution_drift(reference, batch, dims=dims, id_col=id_col)
-        report.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            target_dir
-        )
-
-    return (
-        stream.writeStream.foreachBatch(monitor)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -15,48 +15,29 @@ idempotent dedup guard (re-processed batches anti-join away).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
-
-from pyspark.errors import AnalysisException
 
 from pythonvectordb_spark.functions.vector import l2_normalize, quantize
 
 
-def _read_existing(spark: SparkSession, target_dir: str, id_col: str):
-    """Existing snapshot ids, or None iff the target doesn't exist yet.
-    Only the missing-path case means "first batch" — any other read
+def read_existing(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet frame at ``path``, or None iff the path doesn't exist
+    yet. Only the missing-path case means "first batch": any other read
     failure (corrupt footer, permissions, transient FS error) must fail
-    the batch so the checkpoint retries it; swallowing it would skip the
-    dup-guard and append duplicates permanently (the round-2 ADVICE bug
-    class, fixed in streaming/curation.py:186 and mirrored here)."""
+    the batch so the checkpoint retries it. Swallowing it would skip a
+    sink's dup-guard or dedup gate, or rebuild a view from one batch,
+    permanently. Every streaming sink that reads its own target goes
+    through here."""
     try:
-        return spark.read.parquet(target_dir).select(id_col)
+        return spark.read.parquet(path)
     except AnalysisException as e:
-        # getCondition() is the structured error class (pyspark 4 name;
-        # getErrorClass() pre-4.1) — match on it, not on the message
-        # text, which is format-dependent across Spark versions. The
-        # str(e) fallback only runs when neither accessor exists.
-        getter = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", None
-        )
-        cond = (getter() if getter else None) or str(e)
-        if "PATH_NOT_FOUND" not in cond:
+        # match the structured error class, not the message text, which
+        # is format-dependent across Spark versions
+        if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return None
-
-
-def stream_vectors_from_dir(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """File-source stream of raw vector batches (one parquet file = one
-    ingest batch). Kafka/socket sources drop in without changing the
-    downstream pipeline."""
-    return spark.readStream.schema(schema).parquet(source_dir)
 
 
 def start_vector_ingest(
@@ -72,9 +53,9 @@ def start_vector_ingest(
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         prepared = batch.withColumn("qvec", quantize(l2_normalize(vec_col)))
-        existing = _read_existing(spark, target_dir, id_col)
+        existing = read_existing(spark, target_dir)
         if existing is not None:
-            prepared = prepared.join(existing, id_col, "left_anti")
+            prepared = prepared.join(existing.select(id_col), id_col, "left_anti")
         prepared.write.mode("append").parquet(target_dir)
 
     return (
@@ -121,9 +102,9 @@ def start_indexed_ingest(
             prepared = prepared.withColumn(
                 "pq_code", pq_code_arrow(vec_col, codebooks)
             )
-        existing = _read_existing(spark, target_dir, id_col)
+        existing = read_existing(spark, target_dir)
         if existing is not None:
-            prepared = prepared.join(existing, id_col, "left_anti")
+            prepared = prepared.join(existing.select(id_col), id_col, "left_anti")
         prepared.write.mode("append").partitionBy("cluster_id").parquet(target_dir)
 
     return (

@@ -18,20 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_with_dimension(
-    stream: DataFrame,
-    dim: DataFrame,
-    key: str = "user_id",
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment: join a streaming fact against a static
-    (batch) dimension — the most common streaming join shape. The static
-    side is re-read per micro-batch (so a snapshot refresh is picked up),
-    is broadcast when small, and needs NO watermark because no
-    cross-stream state is kept."""
-    return stream.join(dim, key, how)
-
-
 def purchase_click_interval_join(
     purchases: DataFrame,
     clicks: DataFrame,

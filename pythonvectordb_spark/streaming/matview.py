@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from pythonvectordb_spark.streaming.ingest import read_existing
+
 MARKER_FILE = "_last_batch.json"
 
 
@@ -80,13 +82,11 @@ def start_user_spend_matview(
     result."""
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         if batch_id <= _read_marker(target_dir):
             return  # replayed batch: already folded in
-        try:
-            current = spark.read.parquet(target_dir)
-        except Exception:
-            current = None  # first batch: view starts from the delta
+        # None only when the view doesn't exist yet (first batch); an
+        # unreadable view fails the batch instead of being replaced
+        current = read_existing(batch.sparkSession, target_dir)
         merged = merge_user_spend(current, batch)
         tmp = f"{target_dir}__mv_tmp"
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)

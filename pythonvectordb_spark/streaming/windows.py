@@ -38,26 +38,3 @@ def events_stream_tumbling(
             "value_cents",
         )
     )
-
-
-def sessionize_stream(
-    stream: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Session windows (gap-based) per user — the stateful-window variant;
-    uses Spark's native session_window (state compaction handled by the
-    engine, no custom applyInPandasWithState needed for this shape)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.col(user_col), F.session_window(ts_col, f"{gap_minutes} minutes").alias("win"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .select(
-            user_col,
-            F.unix_timestamp("win.start").cast("long").alias("session_start_epoch"),
-            F.unix_timestamp("win.end").cast("long").alias("session_end_epoch"),
-            "n_events",
-        )
-    )

@@ -1,48 +1,8 @@
-"""Physical layout: bucketed joins must plan without Exchange; salted
-joins must return identical rows to the plain join."""
+"""Skew salting: a salted join must return the plain join's rows."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    from pythonvectordb_spark.plans.explain import explain_str
-    from pythonvectordb_spark.sources.bucketing import write_bucketed
-    from pythonvectordb_spark.sources.testdata import load_table
-
-    spark.catalog.clearCache()
-    orders = load_table(spark, SF_SMOKE, "orders")
-    lineitem = load_table(spark, SF_SMOKE, "lineitem")
-    write_bucketed(orders.withColumnRenamed("o_orderkey", "key"), "b_orders", "key")
-    write_bucketed(lineitem.withColumnRenamed("l_orderkey", "key"), "b_lineitem", "key")
-
-    # small testdata would broadcast (also shuffle-free, but not what we
-    # are demonstrating) — force the big-table code path
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.table("b_orders")
-        b = spark.table("b_lineitem")
-        joined = a.join(b, "key").groupBy("key").agg(F.count(F.lit(1)).alias("n"))
-        txt = explain_str(joined)
-        # co-located buckets: join AND aggregation on the bucket key plan
-        # with ZERO shuffles
-        assert "SortMergeJoin" in txt or "ShuffledHashJoin" in txt
-        assert "Exchange" not in txt
-        assert "Bucketed: true" in txt
-        # sanity: result matches the unbucketed join
-        plain = (
-            orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-            .groupBy("o_orderkey")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        assert sorted((r.key, r.n) for r in joined.collect()) == sorted(
-            (r.o_orderkey, r.n) for r in plain.collect()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_salted_join_matches_plain_join(spark):

@@ -1,6 +1,8 @@
 """PageRank properties: mass conservation, dangling handling, weight
 sensitivity, determinism across partition layouts."""
 
+from datetime import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -204,6 +206,38 @@ def test_hits_and_markov_refuse_inputs_over_the_node_gate(spark, monkeypatch):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     with pytest.raises(ValueError, match=r"markov_stationary: 2 states exceed _SMALL_NODES=1"):
         graph.markov_stationary(events)
+
+
+_EDGES = "src string, dst string, w double"
+_EVENTS = "event_id long, ts timestamp, user_id long, event_type string"
+_T0 = datetime(2024, 1, 1)
+# one edge / one transition (a -> b): the schema the empty case must match
+_ONE = {_EDGES: [("a", "b", 1.0)], _EVENTS: [(1, _T0, 1, "a"), (2, _T0, 1, "b")]}
+
+
+@pytest.mark.parametrize(
+    "op, schema, rows",
+    [
+        ("pagerank", _EDGES, []),
+        ("hits", _EDGES, []),
+        ("markov_stationary", _EVENTS, []),
+        # events, but no user has two of them: no transitions, no states
+        ("markov_stationary", _EVENTS, [(1, _T0, 1, "a"), (2, _T0, 2, "b")]),
+    ],
+    ids=["pagerank", "hits", "markov_stationary", "markov_no_transitions"],
+)
+def test_no_nodes_gives_typed_empty_result(spark, op, schema, rows):
+    """A graph with no nodes (a chain with no states) returns the
+    operator's output schema with 0 rows, not a ZeroDivisionError."""
+    from pythonvectordb_spark.operators import graph
+
+    fn = getattr(graph, op)
+    want = fn(spark.createDataFrame(_ONE[schema], schema)).schema
+    got = fn(spark.createDataFrame(rows, schema))
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want
+    ]
+    assert got.count() == 0
 
 
 def test_adamic_adar_path_graph(spark):

@@ -87,45 +87,6 @@ def test_minhash_lsh_finds_planted_dups(spark):
     assert recall >= 0.8, f"recall {recall:.2f} of {len(exact)} planted pairs"
 
 
-def test_word2vec_parallel_fit_contract(spark):
-    """Batch embedding training runs the PARALLEL fit by default (a
-    single-partition fit would serialize a 100 TB pretrain). Spark's
-    Word2Vec makes no bit-determinism guarantee for the multi-partition
-    merge — and on this synthetic word-salad corpus neighbor identity is
-    noise — so the parallel-fit contract is the output shape: top_n valid
-    vocabulary neighbors with in-range similarities, probe excluded."""
-    from pythonvectordb_spark.indexing import train_word2vec_neighbors
-    from pythonvectordb_spark.sources.testdata import load_table
-    from tests.conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    rows = train_word2vec_neighbors(docs).collect()
-    assert len(rows) == 5
-    assert all(-1.0 <= r.similarity <= 1.0 for r in rows)
-    assert all(r.word != "the" for r in rows)  # probe never its own neighbor
-    vocab = {
-        w
-        for r in docs.select("text").collect()
-        for w in r.text.lower().replace(".", " ").replace(",", " ").split()
-    }
-    assert all(r.word in vocab for r in rows)
-
-
-def test_word2vec_single_partition_fit_is_replayable(spark):
-    """When bit-reproducibility matters more than throughput, the
-    num_partitions=1 configuration must replay exactly under a fixed
-    seed."""
-    from pythonvectordb_spark.indexing import train_word2vec_neighbors
-    from pythonvectordb_spark.sources.testdata import load_table
-    from tests.conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    a = [tuple(r) for r in train_word2vec_neighbors(docs, num_partitions=1).collect()]
-    b = [tuple(r) for r in train_word2vec_neighbors(docs, num_partitions=1).collect()]
-    assert a == b and len(a) == 5
-    assert all(-1.0 <= sim <= 1.0 for _, sim in a)
-
-
 def test_pq_encode_uses_full_codebook_and_compresses(spark, raw):
     """Every subspace must spread across its 16 centroids (a collapsed
     codebook means the centroids missed the data shell) and codes must

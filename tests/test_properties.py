@@ -210,22 +210,6 @@ def test_connected_components_chain_and_clique(spark):
     assert survivors == [1, 10, 20, 99]  # 99 untouched singleton survives
 
 
-def test_latency_log_stats(spark, emb):
-    """§2.9 observability: timed searches fill the ring buffer; stats
-    aggregate it (avg/p50/p95/p99/qps like the reference get_stats)."""
-    from pythonvectordb_spark.operators.search import knn_search
-    from pythonvectordb_spark.operators.stats import LatencyLog
-
-    log = LatencyLog(maxlen=5)
-    q = list(emb.first().embedding)
-    for _ in range(7):  # overflow the ring: only last 5 retained
-        rows = log.time(knn_search(emb, q, k=3))
-        assert len(rows) == 3
-    assert len(log._buf) == 5
-    s = log.stats(spark).first()
-    assert s.avg_ms > 0 and s.p99_ms >= s.p50_ms and s.qps_est > 0
-
-
 def _py_shingles(text, n=3):
     """Pure-Python shingler: whitespace split, empties dropped,
     first-occurrence distinct word n-grams."""

@@ -297,8 +297,7 @@ def test_server_stats(spark, qtable):
     MAX_LATENCIES answered requests and runs no Spark job."""
     import time
 
-    from pythonvectordb_spark.operators.stats import MAX_LATENCIES
-    from pythonvectordb_spark.serving import KnnServer
+    from pythonvectordb_spark.serving import MAX_LATENCIES, KnnServer
 
     tracker = spark.sparkContext.statusTracker()
 

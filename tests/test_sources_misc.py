@@ -1,7 +1,6 @@
-"""Source-format breadth (CSV/JSON via Spark readers — free per SURVEY
-§2.2), id synthesis, and the documented media-decode stub marker."""
+"""Source-format breadth (CSV/JSON/ORC via Spark readers — free per
+SURVEY §2.2), partition pruning, and shard assignment."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -21,25 +20,6 @@ def test_csv_json_roundtrip(spark, tmp_path):
     a = sorted(r.text for r in docs.collect())
     assert sorted(r.text for r in back_csv.collect()) == a
     assert sorted(r.text for r in back_json.collect()) == a
-
-
-def test_synthesize_ids(spark):
-    """Auto-ID generation (reference f"vec_{start+i}", pythonvectordb.py:
-    287-289): ids must be unique and offset by start."""
-    from pythonvectordb_spark.operators.mutation import synthesize_ids
-
-    batch = spark.range(100).select(F.array(F.lit(0.1), F.lit(0.2)).alias("embedding"))
-    out = synthesize_ids(batch, start=1000)
-    ids = [r.vec_id for r in out.collect()]
-    assert len(set(ids)) == 100
-    assert min(ids) >= 1000
-
-
-def test_media_stub_is_documented_unimplemented():
-    from pythonvectordb_spark.operators.media import decode_media_stub_real
-
-    with pytest.raises(NotImplementedError, match="mapInPandas"):
-        decode_media_stub_real()
 
 
 def test_date_partitioned_write_prunes_partitions(spark, tmp_path):

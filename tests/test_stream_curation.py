@@ -1,153 +1,8 @@
-"""Streaming curation must match its batch twins exactly: PII scrub is
-stateless, decontamination is a stream-static vocabulary intersection —
-both run in append mode with no state store."""
-
-import shutil
-
-import pytest
-from pyspark.sql import functions as F
-
-from tests.conftest import SF_SMOKE
+"""The streaming near-dup gate must drop exactly what its batch twin
+(``incremental_minhash_dedup`` against the accumulated corpus) flags."""
 
 
-@pytest.fixture()
-def tmpdirs(tmp_path):
-    d = {"src": str(tmp_path / "src"), "chk1": str(tmp_path / "chk1"), "chk2": str(tmp_path / "chk2")}
-    yield d
-    shutil.rmtree(tmp_path, ignore_errors=True)
-
-
-def test_stream_pii_scrub_matches_batch(spark, tmpdirs):
-    from pythonvectordb_spark.operators.curation import pii_scrub
-    from pythonvectordb_spark.sources.testdata import load_table
-    from pythonvectordb_spark.streaming.curation import scrub_stream
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    planted = docs.unionByName(
-        spark.createDataFrame(
-            [(99001, "mail me at eve@example.org or ring 555-123-9876")],
-            "doc_id long, text string",
-        )
-    )
-    planted.repartition(4).write.parquet(tmpdirs["src"])
-
-    want = sorted(
-        (r.doc_id, r.clean_text, r.n_redacted) for r in pii_scrub(planted).collect()
-    )
-
-    stream = spark.readStream.schema(planted.schema).parquet(tmpdirs["src"])
-    q = (
-        scrub_stream(stream)
-        .writeStream.format("memory")
-        .queryName("scrub_out")
-        .option("checkpointLocation", tmpdirs["chk1"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        (r.doc_id, r.clean_text, r.n_redacted) for r in spark.table("scrub_out").collect()
-    )
-    assert got == want
-    by_id = dict((g[0], g) for g in got)
-    assert by_id[99001][1] == "mail me at <EMAIL> or ring <PHONE>"
-    assert by_id[99001][2] == 2
-
-
-def test_stream_decontaminate_matches_batch(spark, tmpdirs):
-    from pythonvectordb_spark.operators.curation import decontaminate
-    from pythonvectordb_spark.sources.testdata import load_table
-    from pythonvectordb_spark.streaming.curation import decontaminate_stream
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    corpus.repartition(4).write.parquet(tmpdirs["src"])
-
-    want = sorted(
-        (r.doc_id, r.n_shared) for r in decontaminate(corpus, bench, min_common=2).collect()
-    )
-    assert want, "calibration: the benchmark subset shares shingles with the corpus"
-
-    stream = spark.readStream.schema(corpus.schema).parquet(tmpdirs["src"])
-    q = (
-        decontaminate_stream(stream, bench, min_common=2)
-        .writeStream.format("memory")
-        .queryName("decon_out")
-        .option("checkpointLocation", tmpdirs["chk2"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted((r.doc_id, r.n_shared) for r in spark.table("decon_out").collect())
-    assert got == want
-
-
-def test_stream_quality_gate_matches_batch(spark, tmpdirs):
-    from pythonvectordb_spark.operators.curation import quality_filter
-    from pythonvectordb_spark.sources.testdata import load_table
-    from pythonvectordb_spark.streaming.curation import quality_gate_stream
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    planted = docs.unionByName(
-        spark.createDataFrame(
-            [(99002, "tiny doc"), (99003, "spam " * 40)],  # short / repetitive
-            "doc_id long, text string",
-        )
-    )
-    planted.repartition(4).write.parquet(tmpdirs["src"])
-
-    keep_ids = {
-        r.doc_id for r in quality_filter(planted).collect() if r.keep
-    }
-    assert keep_ids and 99002 not in keep_ids and 99003 not in keep_ids
-
-    stream = spark.readStream.schema(planted.schema).parquet(tmpdirs["src"])
-    q = (
-        quality_gate_stream(stream)
-        .writeStream.format("memory")
-        .queryName("gate_out")
-        .option("checkpointLocation", tmpdirs["chk1"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    out = spark.table("gate_out")
-    assert {r.doc_id for r in out.collect()} == keep_ids
-    # original columns survive, verdict signals ride along
-    assert {"doc_id", "text", "n_tokens", "type_token_ratio"} <= set(out.columns)
-    assert "reject_reason" not in out.columns
-
-
-def test_stream_chunker_matches_batch(spark, tmpdirs):
-    from pythonvectordb_spark.operators.textops import chunk_documents
-    from pythonvectordb_spark.sources.testdata import load_table
-    from pythonvectordb_spark.streaming.curation import chunk_stream
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    docs.repartition(4).write.parquet(tmpdirs["src"])
-    want = sorted(
-        (r.doc_id, r.chunk_idx, r.chunk_text)
-        for r in chunk_documents(docs, chunk_tokens=16, overlap=4).collect()
-    )
-
-    stream = spark.readStream.schema(docs.schema).parquet(tmpdirs["src"])
-    q = (
-        chunk_stream(stream, chunk_tokens=16, overlap=4)
-        .writeStream.format("memory")
-        .queryName("chunk_out")
-        .option("checkpointLocation", tmpdirs["chk2"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        (r.doc_id, r.chunk_idx, r.chunk_text) for r in spark.table("chunk_out").collect()
-    )
-    assert got == want
-
-
-def test_stream_dedup_gate_blocks_corpus_near_dups(spark, tmpdirs, tmp_path):
+def test_stream_dedup_gate_blocks_corpus_near_dups(spark, tmp_path):
     """Two sequential micro-batches through the gate: batch 2's exact
     copy and near-copy of batch-1 docs must be dropped; its novel doc
     must land. The drop set must equal the batch twin
@@ -192,63 +47,3 @@ def test_stream_dedup_gate_blocks_corpus_near_dups(spark, tmpdirs, tmp_path):
     )
     q.awaitTermination(180)
     assert {r.doc_id for r in spark.read.parquet(tgt).collect()} == {1, 2, 12}
-
-
-def test_stream_drift_monitor_matches_batch_twin_and_replay_guard(spark, tmp_path):
-    """Each micro-batch's PSI report must equal the batch operator run
-    on (reference, that batch); a crash-replay of an already-committed
-    batch id writes nothing."""
-    from pythonvectordb_spark.operators.curation import distribution_drift
-    from pythonvectordb_spark.streaming.curation import start_drift_monitor
-
-    ref = spark.createDataFrame(
-        [(i, "en" if i < 8 else "de", "s0") for i in range(10)],
-        "doc_id long, lang string, source string",
-    )
-    b1 = spark.createDataFrame(
-        [(100 + i, "de" if i < 7 else "en", "s0") for i in range(10)],
-        "doc_id long, lang string, source string",
-    )
-    b2 = spark.createDataFrame(
-        [(200 + i, "zh", "s1") for i in range(5)],
-        "doc_id long, lang string, source string",
-    )
-    src = str(tmp_path / "drift_src")
-    tgt = str(tmp_path / "drift_tgt")
-    chk = str(tmp_path / "drift_chk")
-
-    def rows_of(df):
-        return {(r.dim, r.value): r.psi_term for r in df.collect()}
-
-    b1.coalesce(1).write.mode("append").parquet(src)
-    q = start_drift_monitor(
-        spark.readStream.schema(b1.schema).parquet(src), ref, tgt, chk
-    )
-    q.awaitTermination(120)
-    got0 = spark.read.parquet(tgt).filter(F.col("batch_id") == 0).drop("batch_id")
-    assert rows_of(got0) == rows_of(distribution_drift(ref, b1))
-
-    b2.coalesce(1).write.mode("append").parquet(src)
-    q = start_drift_monitor(
-        spark.readStream.schema(b1.schema).parquet(src), ref, tgt, chk
-    )
-    q.awaitTermination(120)
-    all_rows = spark.read.parquet(tgt)
-    got1 = all_rows.filter(F.col("batch_id") == 1).drop("batch_id")
-    assert rows_of(got1) == rows_of(distribution_drift(ref, b2))
-    # batch 0's committed report untouched by the second run
-    assert rows_of(all_rows.filter(F.col("batch_id") == 0).drop("batch_id")) == rows_of(
-        distribution_drift(ref, b1)
-    )
-    n_before = all_rows.count()
-
-    # crash-replay: a fresh checkpoint re-delivers batch id 0 — the
-    # guard must find it committed and append nothing
-    q = start_drift_monitor(
-        spark.readStream.schema(b1.schema).parquet(src),
-        ref,
-        tgt,
-        str(tmp_path / "drift_chk2"),
-    )
-    q.awaitTermination(120)
-    assert spark.read.parquet(tgt).count() == n_before

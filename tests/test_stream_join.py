@@ -45,38 +45,3 @@ def test_stream_stream_interval_join_matches_batch(spark, tmpdirs):
     q.awaitTermination(180)
     got = sorted(tuple(r) for r in spark.table("sj_out").collect())
     assert got == expected
-
-
-def test_stream_static_enrichment_matches_batch(spark, tmp_path):
-    """Stream-static join: enriching the event stream with a static
-    per-user dimension must equal the batch join row-for-row."""
-    import shutil
-
-    from pythonvectordb_spark.sources.testdata import load_table
-    from pythonvectordb_spark.streaming.joins import enrich_with_dimension
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    dim = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("user_total_events")
-    )
-    pick = ["event_id", "user_id", "user_total_events"]
-    expected = sorted(
-        tuple(r) for r in enrich_with_dimension(ev, dim).select(*pick).collect()
-    )
-
-    src, chk = str(tmp_path / "src"), str(tmp_path / "chk")
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = (
-        enrich_with_dimension(stream, dim)
-        .select(*pick)
-        .writeStream.format("memory")
-        .queryName("enrich_out")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(tuple(r) for r in spark.table("enrich_out").collect())
-    assert got == expected
-    shutil.rmtree(tmp_path, ignore_errors=True)

@@ -24,17 +24,14 @@ def tmpdirs(tmp_path):
 
 def test_stream_vector_ingest_idempotent(spark, tmpdirs):
     from pythonvectordb_spark.sources.testdata import load_table
-    from pythonvectordb_spark.streaming.ingest import (
-        start_vector_ingest,
-        stream_vectors_from_dir,
-    )
+    from pythonvectordb_spark.streaming.ingest import start_vector_ingest
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     n = emb.count()
     emb.repartition(3).write.parquet(tmpdirs["src"])
     schema = emb.schema
 
-    stream = stream_vectors_from_dir(spark, tmpdirs["src"], schema)
+    stream = spark.readStream.schema(schema).parquet(tmpdirs["src"])
     assert stream.isStreaming
     q = start_vector_ingest(stream, tmpdirs["tgt"], tmpdirs["chk"])
     q.awaitTermination(120)
@@ -47,7 +44,7 @@ def test_stream_vector_ingest_idempotent(spark, tmpdirs):
     # replay the same source with a fresh checkpoint: the anti-join dup
     # guard must keep ingest idempotent (no duplicate ids appended)
     q2 = start_vector_ingest(
-        stream_vectors_from_dir(spark, tmpdirs["src"], schema),
+        spark.readStream.schema(schema).parquet(tmpdirs["src"]),
         tmpdirs["tgt"],
         tmpdirs["chk2"],
     )
@@ -80,32 +77,6 @@ def test_stream_tumbling_matches_batch(spark, tmpdirs):
     assert got == want
 
 
-def test_stream_sessionize(spark, tmpdirs):
-    from pythonvectordb_spark.sources.testdata import load_table
-    from pythonvectordb_spark.streaming.windows import sessionize_stream
-
-    events = load_table(spark, SF_SMOKE, "events")
-    events.write.parquet(tmpdirs["src"])
-    stream = spark.readStream.schema(events.schema).parquet(tmpdirs["src"])
-    q = (
-        sessionize_stream(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("complete")
-        .option("checkpointLocation", tmpdirs["chk"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM sessions_out")
-    assert out.count() > 0
-    row = out.first()
-    assert row.session_end_epoch >= row.session_start_epoch
-    # session integrity: total events across sessions == total events
-    total = out.agg(F.sum("n_events")).first()[0]
-    assert total == events.count()
-
-
 def test_stream_indexed_ingest_matches_batch_index(spark, tmpdirs):
     """Ingest-time IVF+PQ indexing: the streamed, cluster-partitioned
     table must carry the same cluster assignments and PQ codes the batch
@@ -116,17 +87,14 @@ def test_stream_indexed_ingest_matches_batch_index(spark, tmpdirs):
     from pythonvectordb_spark import fixtures as FX
     from pythonvectordb_spark.operators.search import ivf_cluster_id, pq_code_expr
     from pythonvectordb_spark.sources.testdata import load_table
-    from pythonvectordb_spark.streaming.ingest import (
-        start_indexed_ingest,
-        stream_vectors_from_dir,
-    )
+    from pythonvectordb_spark.streaming.ingest import start_indexed_ingest
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     n = emb.count()
     emb.repartition(2).write.parquet(tmpdirs["src"])
 
     q = start_indexed_ingest(
-        stream_vectors_from_dir(spark, tmpdirs["src"], emb.schema),
+        spark.readStream.schema(emb.schema).parquet(tmpdirs["src"]),
         tmpdirs["tgt"],
         tmpdirs["chk"],
         FX.CENTROIDS,
@@ -148,7 +116,7 @@ def test_stream_indexed_ingest_matches_batch_index(spark, tmpdirs):
 
     # replay with a fresh checkpoint: exact-id guard keeps it idempotent
     q2 = start_indexed_ingest(
-        stream_vectors_from_dir(spark, tmpdirs["src"], emb.schema),
+        spark.readStream.schema(emb.schema).parquet(tmpdirs["src"]),
         tmpdirs["tgt"],
         tmpdirs["chk2"],
         FX.CENTROIDS,
